@@ -12,8 +12,9 @@ min-label-propagation CC:
   hash joins + a groupBy-min, all on the same key — Catalyst/AQE reuses
   the exchange where possible;
 * rounds needed = graph diameter; sameAs graphs are near-star-shaped so
-  this converges in a handful of rounds. ``localCheckpoint`` every few
-  rounds truncates join lineage (the classic iterative-Spark failure mode).
+  this converges in a handful of rounds. Every round is one pinned job
+  (``operators.fixpoint``), which truncates join lineage (the classic
+  iterative-Spark failure mode).
 
 For adversarial long-chain graphs switch to the pointer-doubling closure in
 operators/redirects.py (log-diameter rounds) — CC over undirected sameAs
@@ -25,12 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import fixpoint, gate, pin, size
+
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 15,
     strict: bool = True,
-    broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """(vertex, component) for the undirected graph given by edges(src, dst).
 
@@ -39,11 +41,11 @@ def connected_components(
     ONE job per round (VERDICT r3 #4): the old-vs-new comparison is folded
     into the propagation aggregate itself — label rows carry an ``_old``
     tag, the groupBy emits both the new min-label and the previous label,
-    and convergence is an ``observe()`` metric collected BY the per-round
-    ``localCheckpoint`` job (the same fusion transitive_closure uses,
-    operators/redirects.py:96-111) — no second labels-vs-labels join+count
-    job re-reading both label sets each iteration. Checkpointing every
-    round also keeps the join lineage flat.
+    and the changed count is the ``fixpoint`` metric observed by the
+    round's pin — no second labels-vs-labels join+count job re-reading
+    both label sets each iteration. The vertex-sized label table
+    broadcasts into each round's propagation join under the shared byte
+    gate.
 
     ``max_iter`` is a SAFETY CAP, not a silent truncation: min-label
     propagation needs ~diameter rounds, and a long chain of near-duplicates
@@ -52,46 +54,29 @@ def connected_components(
     (default) raises instead of returning wrong components — callers that
     want best-effort labels pass ``strict=False``.
     """
-    from pyspark.sql import Observation
-
-    sym = (
+    sym, _ = pin(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels, m = pin(
         sym.select(F.col("u").alias("vertex"))
         .distinct()
-        .withColumn("component", F.col("vertex"))
-        .localCheckpoint(eager=True)
+        .withColumn("component", F.col("vertex")),
+        **size("vertex", "component"),
     )
-    # the label table stays vertex-sized (one row per vertex, two URI
-    # columns); under the byte gate it broadcasts into each round's
-    # propagation join — the checkpointed RDDs carry no stats, so the
-    # planner otherwise sort-merges, re-exchanging the symmetrized edge
-    # table by v every round. Above the gate the shuffled join remains
-    # the unbounded-scale shape (the pagerank/hits tier policy).
-    row = labels.agg(
-        F.count("*").alias("n"), F.avg(F.length("vertex")).alias("w")
-    ).first()
-    est_bytes = int(row["n"] * (2 * (row["w"] or 0.0) + 48.0))
-    use_broadcast = est_bytes <= broadcast_bytes
+    bc = gate(m)
 
-    def bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if use_broadcast else df
-
-    converged = False
-    for _ in range(max_iter):
+    def step(labels: DataFrame, _) -> DataFrame:
+        labels = labels.select("vertex", "component")
         # candidate labels arriving over edges: neighbor's current component
         incoming = (
             sym.join(bc(labels), sym["v"] == labels["vertex"], "inner")
             .select(sym["u"].alias("vertex"), F.col("component"),
                     F.lit(False).alias("_old"))
         )
-        obs = Observation()
-        new_labels = (
+        return (
             labels.select("vertex", "component", F.lit(True).alias("_old"))
             .union(incoming)
             .groupBy("vertex")
@@ -103,21 +88,18 @@ def connected_components(
             .withColumn(
                 "_changed", (F.col("component") != F.col("_prev")).cast("int")
             )
-            .observe(obs, F.sum("_changed").alias("changed"))
-            .localCheckpoint(eager=True)
         )
-        changed = obs.get["changed"] or 0
-        labels = new_labels.drop("_prev", "_changed")
-        if changed == 0:
-            converged = True
-            break
-    if not converged and strict:
-        raise RuntimeError(
+
+    labels, _ = fixpoint(
+        labels, step, F.sum("_changed"), lambda changed, _: changed == 0,
+        max_iter,
+        on_cap=(
             f"connected_components did not converge in {max_iter} rounds "
             f"(graph diameter exceeds the iteration budget); raise "
             f"max_iter or pass strict=False for best-effort labels"
-        )
-    return labels
+        ) if strict else None,
+    )
+    return labels.select("vertex", "component")
 
 
 def canonical_mapping(labels: DataFrame) -> DataFrame:

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .graph import estimate_vertex_table_bytes
+from .fixpoint import gate, pin, size
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 PROV_DERIVED = "http://www.w3.org/ns/prov#wasDerivedFrom"
@@ -144,7 +144,6 @@ def truth_finder(
     claims: DataFrame,
     source_col: str = "source",
     iterations: int = 2,
-    broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Iterative source-trust voting (TruthFinder/Knowledge-Vault lite).
 
@@ -170,12 +169,10 @@ def truth_finder(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    trust = c.select("src").distinct().withColumn("trust", F.lit(1.0))
-    use_bc = estimate_vertex_table_bytes(trust, "src") <= broadcast_bytes
-
-    def bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if use_bc else df
-
+    trust, m = pin(
+        c.select("src").distinct().withColumn("trust", F.lit(1.0)), **size("src")
+    )
+    bc = gate(m)
     share = None
     for _ in range(iterations):
         conf = (

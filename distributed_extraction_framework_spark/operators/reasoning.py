@@ -209,9 +209,9 @@ def owl_entailment(
       (both directions: each row also fires inv→prop);
     * ``symmetric``: (prop) — prp-symp: ``(s,p,o) ⊢ (o,p,s)``;
     * ``transitive``: (prop) — prp-trp: per-property transitive closure
-      of the CORPUS subgraph, computed pred-aware by repeated squaring
-      (log₂ diameter rounds, ``localCheckpoint`` lineage cuts — the
-      data-sized analog of the schema-sized closures above);
+      of the CORPUS subgraph — ``graph.reachability`` keyed on the
+      property (log₂ diameter rounds; the data-sized analog of the
+      schema-sized closures above);
     * ``functional``: (prop) — prp-fp: ``(s,p,o₁),(s,p,o₂) ⊢
       owl:sameAs(o₁,o₂)`` (emitted once, o₁ < o₂);
     * ``inverse_functional``: (prop) — prp-ifp: ``(s₁,p,o),(s₂,p,o) ⊢
@@ -274,44 +274,13 @@ def owl_entailment(
         )
 
     if transitive is not None:
-        from pyspark.sql import Observation
-
         sub = res.join(F.broadcast(transitive.select("prop")),
                        res["pred"] == F.col("prop")).select(
             "pred", F.col("subj").alias("src"), F.col("obj").alias("dst")
-        ).distinct().localCheckpoint(eager=False)
-        closure = sub
-        # ONE action per round (the observe() fusion every other loop in
-        # the repo uses): the round's checkpoint job collects the row
-        # count, and convergence compares it against the PREVIOUS round's
-        # tracked count — the old form re-counted both materialized
-        # frames every round (3 jobs/round instead of 1+setup)
-        n_prev = sub.count()
-        for _ in range(max_iter):
-            grown = closure.alias("a").join(
-                closure.alias("b"),
-                (F.col("a.pred") == F.col("b.pred"))
-                & (F.col("a.dst") == F.col("b.src")),
-            ).select(
-                F.col("a.pred").alias("pred"),
-                F.col("a.src").alias("src"),
-                F.col("b.dst").alias("dst"),
-            )
-            obs = Observation()
-            nxt = (
-                closure.unionByName(grown).distinct()
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            n_nxt = int(obs.get["n"] or 0)
-            closure = nxt
-            if n_nxt == n_prev:
-                break
-            n_prev = n_nxt
+        )
         derived.append(
-            closure.where(F.col("src") != F.col("dst")).select(
-                F.col("src").alias("subj"), "pred",
-                F.col("dst").alias("obj"),
+            reachability(sub, max_iter, key="pred").select(
+                F.col("src").alias("subj"), "pred", F.col("dst").alias("obj")
             )
         )
 

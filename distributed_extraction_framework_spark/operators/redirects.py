@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .. import schema as S
 from .extractors import base_norm, prepare_pages, resource_uri, ucfirst
 from ..functions import wikitext as W
+from .fixpoint import fixpoint, gate, pin, size
 
 
 def harvest_redirects(
@@ -53,50 +54,35 @@ def harvest_redirects(
     )
 
 
-def transitive_closure(
-    redirects: DataFrame,
-    max_iter: int = 12,
-    broadcast_rows: int = 5_000_000,
-) -> DataFrame:
+def transitive_closure(redirects: DataFrame, max_iter: int = 12) -> DataFrame:
     """Resolve redirect chains to their final target; drop cycles.
 
     Pointer doubling: each iteration rewrites dst → dst's dst, so
     ``max_iter=12`` covers chains up to 2^12 hops. Early-exits when an
-    iteration changes nothing. Each round ``localCheckpoint``s eagerly —
-    the closure table is small (redirects ≪ pages) and the convergence
-    check then reads materialized data instead of recomputing the join
-    chain (the iterative-self-join cost driver at scale, SURVEY.md §7).
-
-    Two per-iteration costs are fused away:
-
-    * convergence is an ``observe()`` metric collected BY the checkpoint
-      job itself — no second scan/count job per round;
-    * when the redirect table is small (≤ ``broadcast_rows``; the same
-      smallness that let the reference ``collectAsMap`` the whole map to
-      the driver, DistRedirects.scala:103-153), the self-join broadcasts
-      its build side — zero shuffles in the loop. Above the threshold it
-      degrades to the shuffled self-join, which is the 10^12-page-safe
-      shape.
+    iteration changes nothing. Each round is one pinned job
+    (``fixpoint``): the closure table is small (redirects ≪ pages), the
+    convergence count is observed by the checkpoint job itself, and the
+    join chain never re-runs (the iterative-self-join cost driver at
+    scale, SURVEY.md §7). While the redirect table fits the shared byte
+    gate (the smallness that let the reference ``collectAsMap`` the whole
+    map, DistRedirects.scala:103-153) the self-join broadcasts its build
+    side — zero shuffles in the loop; above it the shuffled self-join is
+    the 10^12-page-safe shape.
     """
-    from pyspark.sql import Observation
-
-    cur = (
-        redirects.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
+    cur, m = pin(
+        redirects.select("src", "dst").filter(F.col("src") != F.col("dst")),
+        **size("src", "dst"),
     )
-    # one cheap count on materialized data decides the join strategy
-    use_broadcast = cur.count() <= broadcast_rows
-    for _ in range(max_iter):
+    bc = gate(m)
+
+    def step(cur: DataFrame, _) -> DataFrame:
+        cur = cur.select("src", "dst")
         right = cur.select(
             F.col("src").alias("j_src"), F.col("dst").alias("j_dst")
         ).alias("b")
-        if use_broadcast:
-            right = F.broadcast(right)
-        obs = Observation()
-        nxt = (
+        return (
             cur.alias("a")
-            .join(right, F.col("a.dst") == F.col("b.j_src"), "left")
+            .join(bc(right), F.col("a.dst") == F.col("b.j_src"), "left")
             .select(
                 F.col("a.src").alias("src"),
                 F.coalesce(F.col("b.j_dst"), F.col("a.dst")).alias("dst"),
@@ -105,14 +91,11 @@ def transitive_closure(
             # cycles degenerate to self-loops after a doubling → drop (the
             # reference's resolveMap cycle detection)
             .filter(F.col("src") != F.col("dst"))
-            .observe(obs, F.sum(F.col("_jumped").cast("int")).alias("jumps"))
-            .localCheckpoint(eager=True)
         )
-        converged = not (obs.get["jumps"] or 0)
-        cur = nxt.drop("_jumped")
-        if converged:
-            break
-    return cur
+
+    cur, _ = fixpoint(cur, step, F.sum(F.col("_jumped").cast("int")),
+                      lambda jumps, _: jumps == 0, max_iter)
+    return cur.select("src", "dst")
 
 
 def resolve_objects(

@@ -114,6 +114,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.graph import reachability
+
 # one property-path step: forward/inverse URI, a negated URI, or a
 # negated property set !(<a>|<b>), each optionally quantified by
 # + * ? or a bounded {n} / {n,m} / {n,} (tokenized here so the brace
@@ -985,37 +987,6 @@ def _identity_pairs(quads: DataFrame, by_graph: bool = False) -> DataFrame:
     )
 
 
-def _closure(pairs: DataFrame, by_graph: bool) -> DataFrame:
-    """Transitive closure of the step relation; per-graph when scoped.
-
-    GRAPH scoping composes the closure inside each named graph only, so
-    the nodes are ENCODED as graph + NUL + node — one reachability run
-    closes every graph at once, and equal nodes in different graphs
-    never connect. NUL is a safe separator (it cannot occur in an IRI or
-    a lexical form), and the decode splits with limit 2 so node text is
-    preserved verbatim."""
-    from ..operators.graph import reachability
-
-    if not by_graph:
-        return reachability(pairs)
-    sep = "\x00"
-    # GRAPH ?g matches NAMED graphs only: default-graph rows (NULL
-    # context) are excluded BEFORE encoding — concat_ws silently skips
-    # NULLs, so an unfiltered NULL graph would otherwise encode as the
-    # bare node text and decode into corrupted (graph=node, src=NULL)
-    # rows (code-review r5).
-    enc = pairs.filter(F.col("graph").isNotNull()).select(
-        F.concat_ws(sep, "graph", "src").alias("src"),
-        F.concat_ws(sep, "graph", "dst").alias("dst"),
-    )
-    out = reachability(enc)
-    return out.select(
-        F.split("src", sep, 2)[0].alias("graph"),
-        F.split("src", sep, 2)[1].alias("src"),
-        F.split("dst", sep, 2)[1].alias("dst"),
-    )
-
-
 def _bounded_path(
     quads: DataFrame, step: DataFrame, lo: int, hi: int | None, by_graph: bool
 ) -> DataFrame:
@@ -1045,7 +1016,8 @@ def _bounded_path(
     for _ in range(max(lo - 1, 0)):
         cur = compose(cur, step)
     if hi is None:
-        star = _closure(step, by_graph).unionByName(ident)
+        star = reachability(step, key="graph" if by_graph else None)
+        star = star.unionByName(ident)
         return compose(cur, star).distinct()
     acc = cur
     for _ in range(hi - lo):
@@ -1115,7 +1087,9 @@ def _path_pairs(
         hi = int(hi_s) if hi_s else (lo if not comma else None)
         return _bounded_path(quads, pairs, lo, hi, by_graph)
     if quant in ("+", "*"):
-        pairs = _closure(pairs, by_graph)
+        # per-graph closure when scoped: GRAPH ?g matches NAMED graphs
+        # only, and the keyed closure drops the NULL default-graph key
+        pairs = reachability(pairs, key="graph" if by_graph else None)
     if quant in ("*", "?"):
         pairs = pairs.unionByName(_identity_pairs(quads, by_graph)).distinct()
     return pairs

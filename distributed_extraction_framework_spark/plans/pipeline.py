@@ -170,7 +170,15 @@ class Pipeline:
         the persisted lineage table read ONCE per Pipeline instance plus
         everything recorded by this run (``_record`` keeps the mirror in
         sync). All completion/total checks answer from this driver-side
-        list instead of a parquet read + filter + count job each."""
+        list instead of a parquet read + filter + count job each.
+
+        Assumes ONE writer per warehouse: the mirror is never re-read,
+        so lineage that another Pipeline instance or process appends
+        after the first read is invisible to this one. It may then re-run
+        a stage the other writer already committed, or resume a stage
+        whose directory the other writer has since overwritten for a
+        different input fingerprint. Run one Pipeline per warehouse at
+        a time."""
         if self._lineage_cache is None:
             try:
                 rows = (

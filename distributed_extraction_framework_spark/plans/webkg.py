@@ -292,17 +292,25 @@ def incremental_web_triples(
     reference: the incremental-download rationale in download/src/main/
     scala/org/dbpedia/extraction/dump/download/DumpDownload.scala).
 
-    Mechanics — exactly three corpus-key shuffles and ONE extraction
-    pass over only the changed slice:
+    Mechanics — extraction runs over only the changed slice:
 
     1. payload-digest diff of the two capture sets
        (:func:`~distributed_extraction_framework_spark.operators.webarchive.recrawl_diff`
-       on ``md5(html)`` — co-partitioned full-outer join);
+       on ``md5(html)`` — co-partitioned full-outer join), pinned once;
     2. ``old_triples`` minus pages that changed or vanished (left-anti
        join on ``id_col``, which must hold the page URL the triples
        were extracted under);
     3. ``web_page_triples`` over ONLY the changed/added v2 pages
-       (left-semi join, then the shuffle-free composite), unioned back.
+       (left-semi join, then the composite), unioned back.
+
+    The composite fans the changed-slice semi-join out to its five
+    channels, and the slice is not pinned, so the corpus-keyed semi-join
+    (and its scan of ``pages_v2``) re-executes once per channel: five
+    corpus shuffle writes and one extraction pass per channel, not one
+    in total. Pinning the slice and broadcasting the small key sides
+    removes those exchanges, but an interleaved A/B at a ~5k-key diff
+    measured it slower (OPTIMIZATION_r06.md §22), so the plan keeps
+    this shape until the recrawl is large enough to pay for the pin.
 
     Invariant (driver-gated): the patched table is row-identical to
     ``web_page_triples(pages_v2)`` recomputed from scratch.

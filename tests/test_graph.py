@@ -4,6 +4,7 @@ a hand-rolled pure-Python power iteration on the same graph."""
 import pytest
 from pyspark.sql import functions as F
 
+from distributed_extraction_framework_spark.operators import fixpoint
 from distributed_extraction_framework_spark.operators.extractors import extract
 from distributed_extraction_framework_spark.operators.graph import (
     degrees,
@@ -72,28 +73,36 @@ def test_degrees_and_hubs(spark):
     assert top[0]["uri"] == "hub"
 
 
-def test_pagerank_broadcast_tier_is_byte_gated(spark):
+def _both_tiers(monkeypatch, run):
+    """``run()`` under the shuffled tier (gate closed) and the broadcast
+    tier (gate wide open) of the shared byte gate."""
+    out = []
+    for cap in (0, 1 << 30):
+        monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", cap)
+        out.append(run())
+    monkeypatch.undo()
+    return out
+
+
+def test_pagerank_broadcast_tier_is_byte_gated(spark, monkeypatch):
     """ADVICE r3: the broadcast tier must gate on estimated bytes (rows x
     avg key width), not a row count that could broadcast ~1 GB of URIs."""
-    from distributed_extraction_framework_spark.operators.graph import (
-        estimate_vertex_table_bytes,
-        pagerank,
-    )
-
     uris = [(f"http://kg.example.org/resource/Node_{i:04d}",) for i in range(100)]
-    verts = spark.createDataFrame(uris, ["uri"])
-    est = estimate_vertex_table_bytes(verts)
+    _, m = fixpoint.pin(spark.createDataFrame(uris, ["uri"]), **fixpoint.size("uri"))
     # 100 rows x (~40-char URIs + 24B overhead) — the estimate must track it
-    assert 100 * 40 <= est <= 100 * 90
+    monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", 100 * 40)
+    assert fixpoint.gate(m) is not F.broadcast
+    monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", 100 * 90)
+    assert fixpoint.gate(m) is F.broadcast
+    monkeypatch.undo()
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7) % 20}") for i in range(20)], ["src", "dst"]
     )
-    # tiny cap forces the shuffle tier; ranks must be identical either way
-    lo = {r["uri"]: round(r["rank"], 9)
-          for r in pagerank(edges, iterations=4, broadcast_bytes=1).collect()}
-    hi = {r["uri"]: round(r["rank"], 9)
-          for r in pagerank(edges, iterations=4, broadcast_bytes=1 << 30).collect()}
+    # ranks must be identical in either tier
+    lo, hi = _both_tiers(monkeypatch, lambda: {
+        r["uri"]: round(r["rank"], 9)
+        for r in pagerank(edges, iterations=4).collect()})
     assert lo == hi
 
 
@@ -126,15 +135,14 @@ def test_reachability_chain_dag_and_cycle(spark):
     assert got == {("a", "b"), ("b", "a")}  # no self-pairs
 
 
-def test_reachability_broadcast_and_shuffle_tiers_agree(spark):
+def test_reachability_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
     from distributed_extraction_framework_spark.operators.graph import reachability
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(17)], ["src", "dst"]
     )
-    bc = {(r["src"], r["dst"]) for r in reachability(edges).collect()}
-    sh = {(r["src"], r["dst"])
-          for r in reachability(edges, broadcast_rows=0).collect()}
+    sh, bc = _both_tiers(monkeypatch, lambda: {
+        (r["src"], r["dst"]) for r in reachability(edges).collect()})
     assert bc == sh
     assert len(bc) == 17 * 18 // 2  # every (i<j) pair of an 18-node chain
 
@@ -463,14 +471,17 @@ def test_k_truss_four_clique(spark):
     assert set(got.values()) == {2}
 
 
-def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark):
-    """Every iterative loop that grew the byte-gated broadcast tier in
-    round 6 must produce IDENTICAL output in both tiers (the gate only
-    changes the physical join strategy, never the computation — all five
-    are exact min/count/max aggregations; hits is FP but deterministic
-    per plan, so compare at the gate's 6-dp discipline)."""
+def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
+    """Every caller of the shared byte gate must produce IDENTICAL output
+    in both tiers (the gate only changes the physical join strategy,
+    never the computation — the loops are exact min/count/max
+    aggregations; hits and truth_finder are FP but deterministic per
+    plan, so compare at the gates' 6-dp discipline)."""
     from distributed_extraction_framework_spark.operators.canonicalize import (
         connected_components,
+    )
+    from distributed_extraction_framework_spark.operators.fusion import (
+        truth_finder,
     )
     from distributed_extraction_framework_spark.operators.graph import (
         bfs_distances,
@@ -480,6 +491,12 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark):
         strongly_connected_components,
         weighted_sssp,
     )
+    from distributed_extraction_framework_spark.operators.reasoning import (
+        owl_entailment,
+    )
+    from distributed_extraction_framework_spark.operators.redirects import (
+        transitive_closure,
+    )
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 3) % 23}") for i in range(40)]
@@ -487,6 +504,21 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark):
         ["src", "dst"],
     )
     wedges = edges.withColumn("w", (F.length("src") % 3 + 1).cast("double"))
+    # a functional redirect map with chains and a 2-cycle
+    redirects = spark.createDataFrame(
+        [(f"r{i}", f"r{i + 1}") for i in range(9)] + [("x", "y"), ("y", "x")],
+        ["src", "dst"],
+    )
+    quads = edges.select(
+        F.col("src").alias("subj"),
+        F.when(F.length("src") % 2 == 0, "p:a").otherwise("p:b").alias("pred"),
+        F.col("dst").alias("obj"),
+    )
+    transitive = spark.createDataFrame([("p:a",), ("p:b",)], "prop string")
+    claims = spark.createDataFrame(
+        [(f"h{i % 4}", f"s{i % 5}", "p", f"o{(i * i) % 3}") for i in range(30)],
+        ["source", "subj", "pred", "obj"],
+    )
 
     def rows(df, nd=None):
         out = set()
@@ -498,33 +530,17 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark):
             out.add(vals)
         return out
 
-    for lo, hi in [
-        (
-            bfs_distances(edges, ["n0"], broadcast_bytes=0),
-            bfs_distances(edges, ["n0"], broadcast_bytes=1 << 30),
-        ),
-        (
-            weighted_sssp(wedges, ["n0"], broadcast_bytes=0),
-            weighted_sssp(wedges, ["n0"], broadcast_bytes=1 << 30),
-        ),
-        (
-            kcore(edges, k=2, broadcast_bytes=0),
-            kcore(edges, k=2, broadcast_bytes=1 << 30),
-        ),
-        (
-            label_propagation(edges, rounds=3, broadcast_bytes=0),
-            label_propagation(edges, rounds=3, broadcast_bytes=1 << 30),
-        ),
-        (
-            connected_components(edges, broadcast_bytes=0),
-            connected_components(edges, broadcast_bytes=1 << 30),
-        ),
-        (
-            strongly_connected_components(edges, broadcast_bytes=0),
-            strongly_connected_components(edges, broadcast_bytes=1 << 30),
-        ),
+    for run, nd in [
+        (lambda: transitive_closure(redirects), None),
+        (lambda: bfs_distances(edges, ["n0"]), None),
+        (lambda: weighted_sssp(wedges, ["n0"]), None),
+        (lambda: kcore(edges, k=2), None),
+        (lambda: label_propagation(edges, rounds=3), None),
+        (lambda: connected_components(edges), None),
+        (lambda: strongly_connected_components(edges), None),
+        (lambda: owl_entailment(quads, transitive=transitive), None),
+        (lambda: hits(edges, iterations=3), 6),
+        (lambda: truth_finder(claims, iterations=2), 6),
     ]:
-        assert rows(lo) == rows(hi)
-    assert rows(hits(edges, iterations=3, broadcast_bytes=0), nd=6) == rows(
-        hits(edges, iterations=3, broadcast_bytes=1 << 30), nd=6
-    )
+        lo, hi = _both_tiers(monkeypatch, lambda: rows(run(), nd))
+        assert lo and lo == hi

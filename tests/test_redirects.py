@@ -123,12 +123,11 @@ def test_connected_components_on_sameas(spark, pages_df):
 def test_connected_components_one_action_per_round(spark, monkeypatch):
     """VERDICT r3 #4: convergence is an observe() metric collected by the
     per-round checkpoint job — the old second labels-vs-labels join +
-    ``.count()`` action per round must be gone. Spy on the ONLY two action
+    ``.count()`` action per round must be gone. Spy on the ONLY action
     entry points a convergence probe could use (count / collect): the
-    single allowed hit is the ONE-TIME broadcast-gate size probe at setup
-    (a 1-row ``first()``, which routes through ``collect``); anything
-    per-round would add one entry per iteration (this star graph runs ≥2
-    rounds) and still fails the exact-one assertion."""
+    broadcast-gate size probe rides the label table's pin too, so no
+    DataFrame action runs at all; anything per-round would add one entry
+    per iteration (this star graph runs ≥2 rounds)."""
     rows = [("z", "a"), ("z", "b"), ("z", "c"), ("z", "d")]
     edges = spark.createDataFrame(rows, ["src", "dst"])
     DataFrame = type(edges)
@@ -143,8 +142,45 @@ def test_connected_components_one_action_per_round(spark, monkeypatch):
         monkeypatch.setattr(DataFrame, name, spy)
     labels = connected_components(edges)
     monkeypatch.undo()
-    assert calls == ["collect"], (
-        f"only the one-time setup size probe may run an action, saw {calls}"
-    )
+    assert calls == [], f"no DataFrame action may run, saw {calls}"
     comp = {r["vertex"]: r["component"] for r in labels.collect()}
     assert set(comp.values()) == {"a"}
+
+
+def test_one_job_per_round(spark, monkeypatch):
+    """Each ``fixpoint`` round is ONE Spark job: the round's pin also
+    observes its convergence metric, and the broadcast gate reads its size
+    probe off the setup pin, so no count or size-probe job runs beside
+    them. Shuffled tier and AQE off, so every job is an action (no
+    broadcast-collect or query-stage jobs)."""
+    from distributed_extraction_framework_spark.operators import fixpoint
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", 0)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        k = 3
+        chain = spark.createDataFrame(
+            [(f"c{i}", f"c{i + 1}") for i in range(2 ** k)], ["src", "dst"]
+        )
+        # 1 setup pin; k doubling rounds + 1 round that sees no jump
+        assert jobs("tc_rounds", lambda: transitive_closure(chain)) == 1 + k + 1
+        n = 5
+        path = spark.createDataFrame(
+            [(f"p{i}", f"p{i + 1}") for i in range(n)], ["src", "dst"]
+        )
+        # 2 setup pins (edges, labels); the min label walks one hop per
+        # round along the n-edge path, then 1 round changes nothing
+        assert jobs("cc_rounds", lambda: connected_components(path)) == 2 + n + 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
