@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .fixpoint import fixpoint, gate, pin, size
 
 
@@ -380,7 +381,7 @@ def bfs_distances(
     """
     spark = edges.sparkSession
     if isinstance(sources, list):
-        sources = spark.createDataFrame([(s,) for s in sources], "uri string")
+        sources = local_frame(spark, [(s,) for s in sources], "uri string")
     # materialize the cleaned edge set ONCE: every level joins against it,
     # and without the pin each round re-runs the upstream plan (regex
     # extraction when the edges come straight from extract()). Its size
@@ -937,7 +938,7 @@ def weighted_sssp(
     """
     if isinstance(sources, list):
         spark = edges.sparkSession
-        sources = spark.createDataFrame([(s,) for s in sources], "uri string")
+        sources = local_frame(spark, [(s,) for s in sources], "uri string")
     # loop-invariant edge set pinned once (each round joins it); its size
     # gates the frontier broadcast, as in bfs_distances
     e, m = pin(edges.select("src", "dst", F.col("w").cast("double")),

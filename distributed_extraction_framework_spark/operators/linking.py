@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import schema as S
+from ..session import local_frame
 
 try:  # C-speed automaton when available on the cluster (not in this container)
     import ahocorasick as _pyahocorasick
@@ -635,7 +636,7 @@ def detect_mentions_distributed(
     mn = dsurf.agg(F.min(F.length("surface")).alias("mn")).first()["mn"]
     out_schema = "page string, surface string, n_mentions long"
     if mn is None:  # empty dictionary: no mentions anywhere
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     k = int(max(1, min(prefix_len, mn)))
     idx = dsurf.select(F.substring("surface", 1, k).alias("gram"), "surface")
 
@@ -817,7 +818,7 @@ def link_entities(
         spark = pages.sparkSession
         rows = sfd_ck.collect()  # bounded: probe proved ≤ broadcast_rows
         surfaces = sorted({r["surface"] for r in rows})
-        sfd = spark.createDataFrame(rows, schema=surface_forms.schema)
+        sfd = local_frame(spark, rows, surface_forms.schema)
         mentions = detect_mentions(pages, sfd, surfaces=surfaces)
         best = score_candidates(mentions, sfd, salt_buckets=0)
     else:

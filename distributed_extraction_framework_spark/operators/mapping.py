@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema as S
+from ..session import local_frame
 from .extractors import base_norm, enrich_pages, prepare_pages, quad, resource_uri, ucfirst
 
 # (template, class) — which ontology class a mapped template types
@@ -56,11 +57,11 @@ def mapping_tables(
     template_classes=None,
     property_mappings=None,
 ) -> tuple[DataFrame, DataFrame]:
-    tc = spark.createDataFrame(
-        template_classes or DEFAULT_TEMPLATE_CLASSES, TEMPLATE_CLASS_SCHEMA
+    tc = local_frame(
+        spark, template_classes or DEFAULT_TEMPLATE_CLASSES, TEMPLATE_CLASS_SCHEMA
     )
-    pm = spark.createDataFrame(
-        property_mappings or DEFAULT_PROPERTY_MAPPINGS, PROPERTY_MAP_SCHEMA
+    pm = local_frame(
+        spark, property_mappings or DEFAULT_PROPERTY_MAPPINGS, PROPERTY_MAP_SCHEMA
     )
     return tc, pm
 
@@ -170,7 +171,7 @@ def subclass_edges(spark: SparkSession, edges=None, ontology_path: str | None = 
     rows = list(edges or [])
     if ontology_path:
         rows.extend(parse_ontology_classes(ontology_path))
-    return spark.createDataFrame(rows or [("__none__", "")], SUBCLASS_SCHEMA)
+    return local_frame(spark, rows or [("__none__", "")], SUBCLASS_SCHEMA)
 
 
 def instance_types_transitive(
@@ -295,8 +296,8 @@ def load_mappings_xml(
     tc, pm = mapping_tables(
         spark, tclasses or [("__none__", "")], pmaps or [("__none__", "", "", "")]
     )
-    cond_df = spark.createDataFrame(
-        conds or [("__none__", 0, "", "otherwise", "", "")], CONDITION_SCHEMA
+    cond_df = local_frame(
+        spark, conds or [("__none__", 0, "", "otherwise", "", "")], CONDITION_SCHEMA
     )
     return tc, pm, cond_df
 

@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -979,4 +981,4 @@ def synth_media(spark, n: int = 100) -> DataFrame:
             w = h = None
             dur = 1000 * (1 + i % 10)
         rows.append((i, kind, bytearray(payload), mime, w, h, dur))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

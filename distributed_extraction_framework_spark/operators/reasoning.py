@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
+from ..session import local_frame
 from .graph import reachability
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -62,7 +63,7 @@ def _closure(edges: DataFrame | None) -> DataFrame | None:
         seen.discard(start)
         out.extend((start, v) for v in seen)
     spark = edges.sparkSession
-    return spark.createDataFrame(out or [], "src string, dst string")
+    return local_frame(spark, out, "src string, dst string")
 
 
 def rdfs_entailment(

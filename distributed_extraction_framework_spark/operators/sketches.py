@@ -53,6 +53,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # --------------------------------------------------------------------------
 # portable hash primitives
 # --------------------------------------------------------------------------
@@ -549,8 +551,8 @@ def histogram_quantiles(
     mn, mx = float(mm["mn"]), float(mm["mx"])
     spark = df.sparkSession
     if mx == mn:
-        return spark.createDataFrame(
-            [(float(q), round(mn, decimals)) for q in sorted(qs)],
+        return local_frame(
+            spark, [(float(q), round(mn, decimals)) for q in sorted(qs)],
             "q double, value double",
         )
     width = (mx - mn) / bins
@@ -568,8 +570,8 @@ def histogram_quantiles(
     cum = hist.withColumn(
         "cum", F.sum("cnt").over(Window.orderBy("bin"))
     )  # histogram is <= bins rows: the single-reducer window is trivial
-    targets = spark.createDataFrame(
-        [(float(q), int(math.ceil(q * n))) for q in sorted(qs)],
+    targets = local_frame(
+        spark, [(float(q), int(math.ceil(q * n))) for q in sorted(qs)],
         "q double, target long",
     )
     picked = (

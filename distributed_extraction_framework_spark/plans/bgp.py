@@ -115,6 +115,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.graph import reachability
+from ..session import local_frame
 
 # one property-path step: forward/inverse URI, a negated URI, or a
 # negated property set !(<a>|<b>), each optionally quantified by
@@ -1222,8 +1223,8 @@ def _compile_group(
                 (1, _compile_group(quads, inner, graph_var=gterm.value))
             )
     for var, terms in g.values:
-        inline = quads.sparkSession.createDataFrame(
-            [(t.value,) for t in terms], f"{var} string"
+        inline = local_frame(
+            quads.sparkSession, [(t.value,) for t in terms], f"{var} string"
         ).distinct()
         relations.append((3, F.broadcast(inline)))  # inline = maximally selective
     for pq in g.subselects:
@@ -1574,7 +1575,7 @@ def describe_query(quads: DataFrame, query: str) -> DataFrame:
     spark = quads.sparkSession
     parts: list[DataFrame] = []
     if uris:
-        parts.append(spark.createDataFrame([(u,) for u in uris], "r string"))
+        parts.append(local_frame(spark, [(u,) for u in uris], "r string"))
     if m.group("where"):
         groups, limit = _parse_where_tail(query, m.end())
         if limit is not None:
@@ -1659,8 +1660,8 @@ def _const_quads(spark, triples) -> DataFrame:
             raise ValueError("INSERT/DELETE DATA allows no variables")
         rows.append((s.value, p.value, o.value,
                      o.lang if o.kind == "lit" else None))
-    return spark.createDataFrame(
-        rows, "subj string, pred string, obj string, lang string"
+    return local_frame(
+        spark, rows, "subj string, pred string, obj string, lang string"
     ).distinct()
 
 

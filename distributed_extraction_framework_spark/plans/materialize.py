@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 
 def _esc(c: Column) -> Column:
@@ -460,25 +461,17 @@ def write_graph_tables(
             if part_cols:
                 writer = writer.partitionedBy(F.col(part_cols[0]))
             writer.createOrReplace()
+            counts[name] = spark.table(f"{catalog}.graph.{name}").count()
         else:
-            w = df.write.mode("overwrite")
+            # the row count rides the write as an observe() metric, so an
+            # empty partitioned table (no part files to read back) counts 0
+            obs = Observation()
+            w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite")
             if part_cols:
                 w = w.partitionBy(*part_cols)
             w.parquet(f"{warehouse}/{name}")
-    for name in tables:
-        if table_format == "iceberg":
-            counts[name] = spark.table(f"{catalog}.graph.{name}").count()
-        else:
-            try:
-                counts[name] = spark.read.parquet(
-                    f"{warehouse}/{name}"
-                ).count()
-            except Exception:
-                # an EMPTY partitioned table writes _SUCCESS but zero
-                # part files (no inferable schema) — a legal degenerate
-                # output (e.g. a literals-only extractor set has no
-                # edges), not an error
-                counts[name] = 0
+            counts[name] = int(obs.get["n"] or 0)
     return counts
 
 

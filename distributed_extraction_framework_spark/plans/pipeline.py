@@ -34,10 +34,15 @@ from ..operators import extractors as X
 from ..operators.canonicalize import canonicalize_quads, connected_components
 from ..operators.linking import link_entities, surface_forms_from_labels
 from ..operators.redirects import harvest_redirects, resolve_objects, transitive_closure
+from ..session import local_frame
 from . import materialize as M
 
-LINEAGE_COLS = ["run_id", "stage", "partition", "n_rows", "wall_ms",
-                "input_fingerprint", "status", "ts"]
+# bigint counters, as lineage tables of earlier versions hold them, so
+# existing warehouses append and resume unchanged
+LINEAGE_SCHEMA = ("run_id string, stage string, partition string, "
+                  "n_rows bigint, wall_ms bigint, input_fingerprint string, "
+                  "status string, ts bigint")
+METRICS_SCHEMA = "run_id string, metric string, value bigint, ts bigint"
 
 
 @dataclass
@@ -180,19 +185,15 @@ class Pipeline:
         different input fingerprint. Run one Pipeline per warehouse at
         a time."""
         if self._lineage_cache is None:
-            try:
-                rows = (
-                    self.spark.read.parquet(self._stage_path("lineage"))
+            self._lineage_cache = []
+            path = self._stage_path("lineage")
+            if self._exists(path):
+                self._lineage_cache = [
+                    tuple(r) for r in self.spark.read.parquet(path)
                     .select("stage", "partition", "n_rows",
                             "input_fingerprint", "status")
                     .collect()
-                )
-                self._lineage_cache = [
-                    (r["stage"], r["partition"], r["n_rows"],
-                     r["input_fingerprint"], r["status"]) for r in rows
                 ]
-            except Exception:
-                self._lineage_cache = []
         return self._lineage_cache
 
     def _lineage_complete(self, stage: str, fingerprint: str,
@@ -214,16 +215,19 @@ class Pipeline:
             if s == stage and st == "complete" and f == fingerprint
         )
 
+    def _hadoop_path(self, path: str):
+        """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
+        p = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
+
+    def _exists(self, path: str) -> bool:
+        fs, p = self._hadoop_path(path)
+        return fs.exists(p)
+
     def _committed(self, stage: str, fingerprint: str) -> bool:
         """Stage output exists AND lineage says it completed for this input."""
-        path = self._stage_path(stage)
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-        fs = jvm_path.getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
-        if not fs.exists(jvm_path):
-            return False
-        return self._lineage_complete(stage, fingerprint)
+        return (self._exists(self._stage_path(stage) + "/_SUCCESS")
+                and self._lineage_complete(stage, fingerprint))
 
     def _record(self, stage: str, partition: str, n_rows: int, wall_ms: int,
                 fingerprint: str, status: str = "complete") -> None:
@@ -239,14 +243,12 @@ class Pipeline:
     def _flush_lineage(self) -> None:
         if not self._lineage_rows:
             return
-        df = self.spark.createDataFrame(self._lineage_rows, LINEAGE_COLS)
-        df.write.mode("append").parquet(self._stage_path("lineage"))
+        local_frame(self.spark, self._lineage_rows, LINEAGE_SCHEMA).write.mode(
+            "append").parquet(self._stage_path("lineage"))
         self._lineage_rows = []
 
     def _write_stage_schema(self, path: str, df: DataFrame) -> None:
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path + "/_schema.json")
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, p = self._hadoop_path(path + "/_schema.json")
         stream = fs.create(p, True)
         stream.write(bytearray(df.schema.json().encode("utf-8")))
         stream.close()
@@ -257,9 +259,7 @@ class Pipeline:
         except Exception:
             from pyspark.sql.types import StructType
 
-            jvm = self.spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path + "/_schema.json")
-            fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            fs, p = self._hadoop_path(path + "/_schema.json")
             stream = fs.open(p)
             try:
                 raw = bytes(
@@ -506,9 +506,8 @@ class Pipeline:
                 (self.run_id, "pages_in", int(pages_obs.get["pages_in"]), ts),
                 (self.run_id, "quads_out", int(obs.get["quads_out"]), ts),
             ]
-            self.spark.createDataFrame(
-                metrics, ["run_id", "metric", "value", "ts"]
-            ).write.mode("append").parquet(self._stage_path("metrics"))
+            local_frame(self.spark, metrics, METRICS_SCHEMA).write.mode(
+                "append").parquet(self._stage_path("metrics"))
         return outputs
 
 

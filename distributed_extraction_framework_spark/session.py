@@ -17,7 +17,10 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_CONF = {
     # AQE: runtime shuffle-partition coalescing + skew-join splitting.
@@ -99,6 +102,24 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver-side ``rows`` (tuples, positional) as a DataFrame of ``schema``.
+
+    The rows go to the JVM as one Arrow table, so the plan is a Catalyst
+    ``LocalRelation``: no PythonRDD job and no Python worker, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. For bookkeeping
+    and dictionary-sized tables only: every row crosses the driver.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _SHIPPED: set[str] = set()

@@ -530,3 +530,86 @@ def test_pipeline_empty_partitioned_stage_resumes(spark, tmp_path):
     p2.run(pages)
     assert "quads" not in p2._fresh, (
         "empty partitioned stage must resume, not rebuild")
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """local_frame = createDataFrame(rows, ddl) on schema and rows (None
+    values and zero rows included), planned as a LocalRelation."""
+    from distributed_extraction_framework_spark.session import local_frame
+
+    ddl = "s string, n bigint, i int, x double, b binary, a array<string>"
+    rows = [("a", 1, 2, 0.5, bytearray(b"\x00\x01"), ["p", None]),
+            (None, None, None, None, None, None)]
+    for data in (rows, []):
+        got = local_frame(spark, data, ddl)
+        want = spark.createDataFrame(data, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+
+
+def test_stage_bookkeeping_sends_no_driver_rows_through_python(
+    spark, monkeypatch, tmp_path
+):
+    """The lineage flush, the metrics write and linking's broadcast-tier
+    dictionary build driver-side tables as Arrow local relations: no
+    ``createDataFrame`` of a Python list or tuple (a PythonRDD job) runs
+    anywhere in a Pipeline or WebKGPipeline run."""
+    from pyspark.sql import SparkSession
+
+    from distributed_extraction_framework_spark.plans.webkg import (
+        WebKGConfig, WebKGPipeline,
+    )
+    from distributed_extraction_framework_spark.sources.synth import synth_pages
+
+    pages = synth_pages(spark, 40, partitions=2)
+    web = spark.createDataFrame(
+        [("https://w/0", "2024-01-01 00:00:00",
+          '<a href="https://w/1">x</a><script type="application/ld+json">'
+          '{"@id":"https://e/0","n":"v"}</script>', 200, None),
+         ("https://w/1", "2024-01-01 00:00:00", None, 301, "https://w/0")],
+        "url string, warc_ts string, html string, http_status int, "
+        "http_location string",
+    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+    local_inputs = []
+    orig = SparkSession.createDataFrame
+
+    def guarded(self, data, *args, **kwargs):
+        if isinstance(data, (list, tuple)):
+            local_inputs.append(data)
+            raise AssertionError("driver rows must go through local_frame")
+        return orig(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", guarded)
+    out = run_pipeline(spark, pages, str(tmp_path / "wiki"),
+                       canonicalize=False)
+    web_out = WebKGPipeline(
+        spark, WebKGConfig(warehouse=str(tmp_path / "web"))
+    ).run(web)
+    monkeypatch.undo()
+    assert not local_inputs
+    assert out["entity_links"].count() > 0
+    assert web_out["web_triples_resolved"].count() > 0
+    assert spark.read.parquet(str(tmp_path / "wiki" / "metrics")).count() == 2
+
+
+def test_graph_table_lineage_counts_ride_the_writes(spark, pages_df, tmp_path):
+    """Graph-table lineage totals equal the written tables' row counts; a
+    literals-only extractor set writes an empty ``edges`` table, which
+    records 0."""
+    from distributed_extraction_framework_spark.plans.pipeline import (
+        Pipeline, PipelineConfig,
+    )
+
+    wh = str(tmp_path / "wh_graph")
+    p = Pipeline(spark, PipelineConfig(
+        warehouse=wh, extractors=["labels"], link_entities=False,
+        canonicalize=False, use_disambiguation_set=False))
+    out = p.run(pages_df)
+    lineage = {r["stage"]: r["n_rows"]
+               for r in spark.read.parquet(wh + "/lineage").collect()
+               if r["stage"] in ("edges", "literals", "nodes", "predicates")}
+    assert lineage["edges"] == 0 == out["edges"].count()
+    for name in ("literals", "nodes", "predicates"):
+        assert lineage[name] == spark.read.parquet(f"{wh}/{name}").count() > 0
