@@ -24,7 +24,6 @@ Python ``re`` so the Spark plan and the pure-Python oracle
 from __future__ import annotations
 
 import re
-from typing import Iterable
 
 import pandas as pd
 
@@ -286,19 +285,12 @@ def html_to_text_kernel(html: bytes | None) -> str | None:
 
 
 # --------------------------------------------------------------------------
-# compute-bound kernel generation (character-walk parser)
+# character-walk reference kernels (test references, no production caller)
 #
-# The engine ships TWO parse-kernel operating points with identical
-# semantics (fuzz-proven equal in tests/test_property.py):
-#
-# * ``fast`` (default): the C-speed str.find/regex-tokenizer kernel above —
-#   ~2.5× higher per-core throughput, which on a SINGLE shared-memory host
-#   pushes a 32-thread run into the machine's memory-bandwidth wall;
-# * ``compute`` (``SPARK_GRAFT_KERNEL=compute``): the original
-#   character-walk kernel — more CPU per byte, so per-core demand stays
-#   below the shared-resource walls and measured multi-core scaling
-#   efficiency tracks the CPU ceiling instead of the bandwidth ceiling.
-#   This is the scaling-bench gate configuration (BENCH/BASELINE.md).
+# The production parse is parse_page_kernel above (str.find/regex
+# tokenizer). These are the original character-walk implementations of
+# the same semantics, kept only as the reference the fuzz tests in
+# tests/test_property.py compare the fast kernels against.
 # --------------------------------------------------------------------------
 
 def find_top_level_templates_charwalk(text: str) -> list[str]:
@@ -378,30 +370,12 @@ def parse_page_kernel_charwalk(text: str) -> dict:
     return {"infobox": infobox, "coords": coords}
 
 
-PARSE_KERNELS = {
-    "fast": parse_page_kernel,
-    "compute": parse_page_kernel_charwalk,
-}
-
-
 # --------------------------------------------------------------------------
 # pandas (Arrow-vectorized) wrappers
 # --------------------------------------------------------------------------
 
-def parse_page_series(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: parse_page_kernel(t if isinstance(t, str) else ""))
-
-
-def html_to_text_series(htmls: pd.Series) -> pd.Series:
-    return htmls.map(html_to_text_kernel)
-
-
-def make_parse_page_udf(kernel: str | None = None, deterministic: bool = True):
+def make_parse_page_udf(deterministic: bool = True):
     """Pandas UDF: text → PARSED_PAGE_SCHEMA struct (one parse per page).
-
-    ``kernel`` (default ``$SPARK_GRAFT_KERNEL`` or 'fast') selects the
-    parse kernel generation — see the PARSE_KERNELS block above. Resolved
-    driver-side at UDF creation, so the choice ships inside the closure.
 
     ``deterministic=False`` marks the UDF non-deterministic so the
     optimizer may not duplicate it below an inferred filter (the
@@ -412,17 +386,15 @@ def make_parse_page_udf(kernel: str | None = None, deterministic: bool = True):
     plan explodes the struct directly (operators/mapping.py) opt in,
     while extract()'s fused projection (no such filter) keeps the
     deterministic default and its filter-pushdown freedom."""
-    import os
-
     from pyspark.sql.functions import pandas_udf
 
     from ..schema import PARSED_PAGE_SCHEMA
 
-    kfn = PARSE_KERNELS[kernel or os.environ.get("SPARK_GRAFT_KERNEL", "fast")]
-
     @pandas_udf(PARSED_PAGE_SCHEMA)
     def parse_page(texts: pd.Series) -> pd.DataFrame:
-        parsed = [kfn(t if isinstance(t, str) else "") for t in texts]
+        parsed = [
+            parse_page_kernel(t if isinstance(t, str) else "") for t in texts
+        ]
         return pd.DataFrame(
             {
                 "infobox": [

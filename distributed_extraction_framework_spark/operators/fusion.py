@@ -93,7 +93,7 @@ def resolve_functional(claims: DataFrame, source_col: str = "source") -> DataFra
       struct(-votes, obj) — lexicographic struct ordering gives
       max-votes-then-min-obj in ONE hash aggregation (vs the window
       form's full exchange + SORT of the votes table: 13.9 s vs 9.7 s
-      at 8 cores/32M, scripts/bench_fusion_forms.py). NULL objs would
+      at 8 cores/32M, BENCH/fusion_forms.json). NULL objs would
       sort first here; callers fuse extracted literals, never NULL.
     """
     d = (

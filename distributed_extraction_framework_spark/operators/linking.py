@@ -36,11 +36,6 @@ from pyspark.sql.types import ArrayType, StringType
 from .. import schema as S
 from ..session import local_frame
 
-try:  # C-speed automaton when available on the cluster (not in this container)
-    import ahocorasick as _pyahocorasick
-except ImportError:  # pragma: no cover
-    _pyahocorasick = None
-
 
 # --------------------------------------------------------------------------
 # Aho-Corasick automaton (pure Python, public-knowledge algorithm)
@@ -96,124 +91,6 @@ class AhoCorasick:
 
     def find_all_batch(self, texts: list[str]) -> list[list[str]]:
         return [self.find_all(t) for t in texts]
-
-
-# --------------------------------------------------------------------------
-# vectorized scanner — the production kernel
-# --------------------------------------------------------------------------
-class VectorScanner:
-    """Multi-pattern matcher with AC semantics (every occurrence of every
-    pattern, overlaps included) on a numpy-vectorized batch path: patterns
-    group by byte length L; per length, a rolling polynomial hash of every
-    L-byte window of the WHOLE Arrow batch is computed in L fused numpy
-    passes, windows are prefiltered through a 4 MB Bloom table (one uint8
-    gather), and the rare survivors are exact-verified.
-
-    Measured on this container (5 distinct surface lengths, 60 k surfaces,
-    ~1 MB batches): ~8-12 MB/s/core after numpy warm-up — on par with the
-    pure-Python automaton (~10 MB/s/core, root-heavy text keeps it in the
-    cheap `goto[0]` fast path), NOT faster: this kernel pays Σ_L passes
-    over the buffer where AC pays one. It wins when texts are
-    automaton-hostile (dense prefix overlap keeps AC deep in fail chains)
-    and loses when the dictionary has many distinct lengths; `make_matcher`
-    therefore defaults to the automaton and both are differential-tested
-    against each other (tests/test_property.py). On a real cluster install
-    pyahocorasick (C, ~100× both) — it is preferred automatically.
-
-    Matching is on UTF-8 bytes; UTF-8 is self-synchronizing, so byte-level
-    occurrences are exactly character-level occurrences.
-    """
-
-    _BASE = np.uint64(1099511628211)
-    _BMASK = np.uint64((1 << 22) - 1)
-
-    def __init__(self, patterns: list[str]):
-        if any("\x00" in p for p in patterns):
-            # NUL is the batch row separator in find_all_batch — a
-            # NUL-bearing pattern could exact-verify across the gap and
-            # attribute a phantom mention to the earlier row (same guard
-            # as CScanner; code-review r5 wave-2 #8)
-            raise RuntimeError("NUL byte in pattern")
-        self.by_len: dict[int, tuple[np.ndarray, dict[bytes, str]]] = {}
-        grouped: dict[int, dict[bytes, str]] = {}
-        for p in patterns:
-            b = p.encode("utf-8")
-            if b:
-                grouped.setdefault(len(b), {})[b] = p
-        old = np.seterr(over="ignore")
-        try:
-            for L, table in grouped.items():
-                hs = np.zeros(len(table), dtype=np.uint64)
-                for i, b in enumerate(table):
-                    h = np.uint64(0)
-                    for byte in b:
-                        h = h * self._BASE + np.uint64(byte)
-                    hs[i] = h
-                hs = np.unique(hs)
-                # Bloom-style prefilter: one uint8 gather per window beats a
-                # binary search per window by ~20×; FP rate ~|dict|/2^22,
-                # false positives fall through to the exact verify anyway.
-                bloom = np.zeros(1 << 22, dtype=np.uint8)
-                bloom[(hs & self._BMASK).astype(np.int64)] = 1
-                bloom[((hs >> np.uint64(22)) & self._BMASK).astype(np.int64)] |= 2
-                self.by_len[L] = (hs, bloom, table)
-        finally:
-            np.seterr(**old)
-
-    def find_all(self, text: str) -> list[str]:
-        return self.find_all_batch([text])[0]
-
-    def find_all_batch(self, texts: list[str]) -> list[list[str]]:
-        """Scan a whole Arrow batch in one set of numpy passes.
-
-        Texts are joined into ONE byte buffer with a NUL gap (NUL occurs in
-        no pattern, so windows can't match across a boundary); the rolling
-        hash + membership probe then runs over megabyte-scale arrays where
-        numpy's per-call overhead amortizes to nothing. Candidate positions
-        map back to rows via searchsorted on the row-offset table.
-        """
-        bufs = [t.encode("utf-8") for t in texts]
-        out: list[list[str]] = [[] for _ in texts]
-        if not self.by_len or not bufs:
-            return out
-        gap = max(self.by_len)  # NUL gap ≥ longest pattern
-        sep = b"\x00" * gap
-        raw = sep.join(bufs)
-        buf = np.frombuffer(raw, dtype=np.uint8)
-        # start offset of each row in the joined buffer
-        starts = np.zeros(len(bufs), dtype=np.int64)
-        for i in range(1, len(bufs)):
-            starts[i] = starts[i - 1] + len(bufs[i - 1]) + gap
-        n = buf.size
-        old = np.seterr(over="ignore")
-        try:
-            for L, (hashes, bloom, table) in self.by_len.items():
-                if n < L:
-                    continue
-                m = n - L + 1
-                h = np.zeros(m, dtype=np.uint64)
-                for j in range(L):
-                    h = h * self._BASE + buf[j : j + m]
-                pre = np.nonzero(
-                    (bloom[(h & self._BMASK).astype(np.int64)] & 1).astype(bool)
-                    & (bloom[((h >> np.uint64(22)) & self._BMASK).astype(np.int64)] & 2).astype(bool)
-                )[0]
-                if pre.size == 0:
-                    continue
-                hp = h[pre]
-                idx = np.searchsorted(hashes, hp)
-                idx[idx == hashes.size] = 0
-                cand = pre[hashes[idx] == hp]
-                if cand.size == 0:
-                    continue
-                rows = np.searchsorted(starts, cand, side="right") - 1
-                for pos, row in zip(cand.tolist(), rows.tolist()):
-                    p = table.get(raw[pos : pos + L])
-                    if p is not None:
-                        out[row].append(p)
-        finally:
-            np.seterr(**old)
-        return out
 
 
 # --------------------------------------------------------------------------
@@ -440,50 +317,21 @@ class CScanner:
         return out
 
 
-class _CAutomaton:
-    """pyahocorasick wrapper with the same find_all contract."""
+def make_matcher(patterns: list[str]):
+    """Exact multi-pattern matcher: the vendored compiled scanner
+    (CScanner), or the pure-Python automaton when CScanner cannot take the
+    dictionary (no C toolchain, a scanner library that fails to build or
+    load, or a NUL in a pattern).
 
-    def __init__(self, patterns: list[str]):  # pragma: no cover (no C lib here)
-        self.a = _pyahocorasick.Automaton()
-        for p in patterns:
-            if p:
-                self.a.add_word(p, p)
-        self.a.make_automaton()
-
-    def find_all(self, text: str) -> list[str]:  # pragma: no cover
-        return [v for _, v in self.a.iter(text)]
-
-    def find_all_batch(self, texts: list[str]) -> list[list[str]]:  # pragma: no cover
-        return [self.find_all(t) for t in texts]
-
-
-def make_matcher(patterns: list[str], kernel: str = "auto"):
-    """Fastest available exact multi-pattern matcher.
-
-    kernel='auto': pyahocorasick (C lib) when importable, else the vendored
-    compiled scanner (CScanner — C source shipped in this module, built on
-    first use when a toolchain exists), else the pure-Python automaton.
-    'vector' forces the numpy batch scanner, 'python' the automaton,
-    'c' the vendored scanner (raises without a toolchain).
-
-    One contract across all kernels: empty patterns are dropped here (the
-    pure-Python automaton would otherwise report "" on every scan while the
-    C/vector kernels silently skip it — the auto-fallback must not change
-    semantics).
+    Empty patterns are dropped here: the pure-Python automaton would
+    otherwise report "" on every scan while CScanner skips it, and the
+    fallback must not change semantics.
     """
     patterns = [p for p in patterns if p]
-    if kernel == "vector":
-        return VectorScanner(patterns)
-    if kernel == "c":
+    try:
         return CScanner(patterns)
-    if kernel == "auto":
-        if _pyahocorasick is not None:  # pragma: no cover
-            return _CAutomaton(patterns)
-        try:
-            return CScanner(patterns)
-        except Exception:
-            pass
-    return AhoCorasick(patterns)
+    except (RuntimeError, OSError):
+        return AhoCorasick(patterns)
 
 
 _AC_CACHE: dict[str, object] = {}
@@ -576,7 +424,6 @@ def detect_mentions_distributed(
     key_col: str = "url",
     prefix_len: int = 8,
     salt_buckets: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """(key, surface, n_mentions) — same contract as
     :func:`detect_mentions`, but the dictionary stays DISTRIBUTED: no
@@ -609,15 +456,10 @@ def detect_mentions_distributed(
        Aho-Corasick ``find_all`` the broadcast tier uses; differential-
        tested in test_linking.py).
 
-    ``materialize=True`` pins the pruned ``(page, lower(text))``
-    projection with one eager ``localCheckpoint`` so the gram branch and
-    the verify branch both read the SAME single source scan (the
-    diamond dataflow would otherwise re-scan the source per branch).
-    That costs one block-manager write of the pruned corpus — the same
-    bytes a shuffle of the corpus would spill, and strictly less IO than
-    a second source scan; on clusters where re-scanning cheap columnar
-    storage beats local disk, pass ``materialize=False`` to re-scan
-    instead (two source scans, still independent of dictionary size).
+    The pruned ``(page, lower(text))`` projection is pinned with one
+    eager ``localCheckpoint`` so the gram branch and the verify branch
+    both read the SAME single source scan (the diamond dataflow would
+    otherwise re-scan the source per branch).
 
     Case/Unicode contract: text is lowercased JVM-side (``F.lower``)
     before both gram generation and verification, so the scan is
@@ -645,9 +487,7 @@ def detect_mentions_distributed(
         F.lower(F.coalesce(F.col(text_col).cast("string"), F.lit(""))).alias(
             "_t"
         ),
-    )
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
     # gram generation is CHUNKED (code-review r5): materializing every
     # k-gram of a page as one array is an O(k·|text|) transient — a
@@ -768,12 +608,15 @@ def score_candidates(
     )
 
 
+# link_entities' shard cap for the sharded-broadcast tier (see its docstring)
+MAX_BROADCAST_SHARDS = 8
+
+
 def link_entities(
     pages: DataFrame,
     surface_forms: DataFrame,
     salt_buckets: int = 8,
     broadcast_rows: int = 1_000_000,
-    max_broadcast_shards: int = 8,
 ) -> DataFrame:
     """Full linking pass: detect → score → linked mention quads.
 
@@ -787,7 +630,7 @@ def link_entities(
       surfaces and a broadcast scoring join; the mention groupBy's
       (page, surface) partitioning is reused by the scoring window, so the
       whole pass is two scans + one shuffle + one action;
-    * **large dictionary, ≤ ``max_broadcast_shards`` shards**: the driver
+    * **large dictionary, ≤ ``MAX_BROADCAST_SHARDS`` shards**: the driver
       NEVER materializes the full surface set. The distinct surfaces are
       hash-sharded into ``ceil(n / broadcast_rows)`` shards; each shard
       (≤ ~``broadcast_rows`` strings) is collected alone, scanned as its
@@ -797,7 +640,7 @@ def link_entities(
       dictionary size, at the cost of one corpus scan per shard (the
       standard sharded-broadcast trade; scans are embarrassingly parallel
       and shuffle-free);
-    * **unbounded dictionary (> ``max_broadcast_shards`` shards)**: the
+    * **unbounded dictionary (> ``MAX_BROADCAST_SHARDS`` shards)**: the
       per-shard rescans would multiply corpus IO (100 shards → 100 scans
       of a 100 TB corpus), so mention detection switches to
       :func:`detect_mentions_distributed` — ONE corpus pass, candidate
@@ -828,7 +671,7 @@ def link_entities(
         )
         n_surfaces = dsurf.count()
         n_shards = max(1, -(-n_surfaces // broadcast_rows))  # ceil div
-        if n_shards > max_broadcast_shards:
+        if n_shards > MAX_BROADCAST_SHARDS:
             mentions = detect_mentions_distributed(
                 pages, dsurf, salt_buckets=salt_buckets
             )

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from distributed_extraction_framework_spark.operators import linking
 from distributed_extraction_framework_spark.operators.extractors import extract
 from distributed_extraction_framework_spark.operators.linking import (
     AhoCorasick,
@@ -131,12 +132,11 @@ def test_large_dict_path_is_sharded_and_bounded(spark, pages_df, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
     cap = 4  # forces ceil(n_surfaces / 4) >= 3 shards
-    # max_broadcast_shards pinned high: this test exercises the SHARDED
+    # MAX_BROADCAST_SHARDS pinned high: this test exercises the SHARDED
     # tier; above the shard cap link_entities switches to the single-scan
     # distributed tier (tested separately below)
-    linked = link_entities(
-        pages_df, sf, broadcast_rows=cap, max_broadcast_shards=1000
-    )
+    monkeypatch.setattr(linking, "MAX_BROADCAST_SHARDS", 1000)
+    linked = link_entities(pages_df, sf, broadcast_rows=cap)
     monkeypatch.undo()  # internal collects all happen at build time
     got = {(r["subj"], r["surface"], r["obj"]) for r in linked.collect()}
     assert got == expected
@@ -148,21 +148,34 @@ def test_large_dict_path_is_sharded_and_bounded(spark, pages_df, monkeypatch):
     assert max(collected_sizes) <= 3 * cap
 
 
-def test_make_matcher_drops_empty_patterns_uniformly():
-    """All kernels share one contract: '' never matches (ADVICE r3)."""
-    from distributed_extraction_framework_spark.operators.linking import (
-        VectorScanner,
-        make_matcher,
-    )
+def test_make_matcher_drops_empty_patterns_uniformly(monkeypatch):
+    """The compiled scanner and its pure-Python fallback share one
+    contract: '' never matches (ADVICE r3)."""
 
-    for kernel in ("python", "vector"):
-        m = make_matcher(["", "ab"], kernel=kernel)
-        assert m.find_all("xaby") == ["ab"]
-    # the raw pure-Python class used directly would have reported '' —
-    # make_matcher is the contract point
-    auto = make_matcher([""], kernel="python")
-    assert auto.find_all("anything") == []
-    assert VectorScanner(["ab"]).find_all_batch(["ab", ""]) == [["ab"], []]
+    def check():
+        assert linking.make_matcher(["", "ab"]).find_all("xaby") == ["ab"]
+        # the raw pure-Python class used directly would have reported '' —
+        # make_matcher is the contract point
+        assert linking.make_matcher([""]).find_all("anything") == []
+        m = linking.make_matcher(["ab"])
+        assert m.find_all_batch(["ab", ""]) == [["ab"], []]
+        return m
+
+    if linking._ac_c_lib() is not None:
+        assert isinstance(check(), linking.CScanner)
+    monkeypatch.setattr(linking, "_ac_c_lib", lambda: None)
+    assert isinstance(check(), AhoCorasick)
+
+
+def test_make_matcher_falls_back_on_nul_pattern():
+    """NUL is CScanner's batch row separator, so a NUL-bearing dictionary
+    goes to the pure-Python automaton, which still reports every hit."""
+    m = linking.make_matcher(["a\x00b", "ab"])
+    assert isinstance(m, AhoCorasick)
+    assert m.find_all_batch(["xab a\x00b ab", ""]) == [
+        ["ab", "a\x00b", "ab"],
+        [],
+    ]
 
 
 def test_anchor_priors_commonness(spark):
@@ -240,9 +253,8 @@ def test_distributed_mentions_match_broadcast(spark):
     assert ("u2", "doc", 3) in exp and ("u2", "dock", 2) in exp
     assert ("u5", "abab", 3) in exp  # ABAB + overlapping ababab
     for kwargs in (
-        {},  # default: salted, materialized
+        {},  # default: salted
         {"salt_buckets": 1},
-        {"materialize": False},
         {"prefix_len": 2},
     ):
         got = {
@@ -259,7 +271,7 @@ def test_distributed_mentions_match_broadcast(spark):
 
 
 def test_unbounded_dict_routes_to_single_scan_tier(spark, pages_df, tmp_path):
-    """Above max_broadcast_shards the large-dict path must (a) produce
+    """Above MAX_BROADCAST_SHARDS the large-dict path must (a) produce
     the same links as the broadcast path, (b) never collect the
     dictionary to the driver, and (c) scan the pages SOURCE exactly once
     — the executed plan contains no file scan of the pages parquet
@@ -353,9 +365,7 @@ def test_distributed_mentions_chunk_boundaries(spark):
     sf = spark.createDataFrame([(s,) for s in surfaces], ["surface"])
     got = {
         (r["page"], r["surface"]): r["n_mentions"]
-        for r in detect_mentions_distributed(
-            pages, sf, salt_buckets=4, materialize=False
-        ).collect()
+        for r in detect_mentions_distributed(pages, sf, salt_buckets=4).collect()
     }
     assert got == {
         ("u1", "needle"): 3,
@@ -418,17 +428,3 @@ def test_collective_link_caps_candidates_and_breaks_ties(spark):
     ).collect()
     # equal scores tie-break on entity string: A < B; C capped away anyway
     assert [(r["entity"], r["score"]) for r in rows] == [("A", 0.5)]
-
-
-def test_vector_scanner_rejects_nul_patterns():
-    """NUL is the batch row separator: VectorScanner must refuse
-    NUL-bearing patterns like CScanner does, instead of risking phantom
-    cross-row matches (code-review r5 wave-2 #8)."""
-    import pytest as _pytest
-
-    from distributed_extraction_framework_spark.operators.linking import (
-        VectorScanner,
-    )
-
-    with _pytest.raises(RuntimeError, match="NUL"):
-        VectorScanner(["ok", "bad\x00pattern"])
