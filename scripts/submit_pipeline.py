@@ -7,12 +7,21 @@ same command runs on local[N] or a real cluster master:
     python -c "import shutil; shutil.make_archive('/tmp/defs_pkg', 'zip', \
         '.', 'distributed_extraction_framework_spark')" && \
     spark-submit --master local[8] \
+        --conf "spark.driver.defaultJavaOptions=-XX:Tier4InvocationThreshold=50000 \
+    -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 \
+    -XX:Tier4BackEdgeThreshold=400000" \
         --py-files /tmp/defs_pkg.zip \
         scripts/submit_pipeline.py \
         --pages /path/to/pages_parquet --warehouse /path/to/warehouse
 
 With --synth N (no --pages), generates the deterministic corpus instead —
 useful for smoke-testing a new cluster.
+
+Every ``spark.sql.*`` default of ``session.DEFAULT_CONF`` that the
+submitter did not pass is set on the session after launch. JVM options
+(the driver's one-shot JIT policy) cannot be set after launch, so the
+command above passes ``spark.driver.defaultJavaOptions`` itself, with the
+same string as ``DEFAULT_CONF``.
 """
 
 from __future__ import annotations
@@ -39,7 +48,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("defs-pipeline").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+    from distributed_extraction_framework_spark.session import DEFAULT_CONF
+
+    submitted = spark.sparkContext.getConf()
+    for k, v in DEFAULT_CONF.items():
+        if k.startswith("spark.sql.") and not submitted.contains(k):
+            spark.conf.set(k, v)
 
     from distributed_extraction_framework_spark.plans.pipeline import (
         Pipeline, PipelineConfig,
@@ -66,7 +81,9 @@ def main() -> None:
         M.write_ntriples(outputs["quads"], f"{args.warehouse}/ntriples")
 
     summary = {name: df.count() for name, df in outputs.items()}
-    print(json.dumps({"status": "ok", "counts": summary}))
+    conf = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")}
+    print(json.dumps({"status": "ok", "counts": summary, "conf": conf}))
 
 
 if __name__ == "__main__":

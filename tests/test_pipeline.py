@@ -613,3 +613,14 @@ def test_graph_table_lineage_counts_ride_the_writes(spark, pages_df, tmp_path):
     assert lineage["edges"] == 0 == out["edges"].count()
     for name in ("literals", "nodes", "predicates"):
         assert lineage[name] == spark.read.parquet(f"{wh}/{name}").count() > 0
+
+
+def test_driver_jvm_runs_the_one_shot_jit_policy(spark):
+    """The driver JVM was launched with every flag of the one-shot JIT
+    policy, although the session fixture passes its own ``extra_conf``."""
+    from distributed_extraction_framework_spark.session import DEFAULT_CONF
+
+    args = set(spark._jvm.java.lang.management.ManagementFactory
+               .getRuntimeMXBean().getInputArguments())
+    policy = DEFAULT_CONF["spark.driver.defaultJavaOptions"].split()
+    assert policy and set(policy) <= args, sorted(args)

@@ -6,6 +6,8 @@ import os
 import shutil
 import subprocess
 
+from distributed_extraction_framework_spark.session import DEFAULT_CONF
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -26,6 +28,8 @@ def test_spark_submit_py_files(tmp_path):
             spark_submit, "--master", "local[4]",
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.shuffle.partitions=8",
+            "--conf", "spark.driver.defaultJavaOptions="
+            + DEFAULT_CONF["spark.driver.defaultJavaOptions"],
             "--py-files", pkg_zip + ".zip",
             os.path.join(REPO, "scripts", "submit_pipeline.py"),
             "--synth", "300", "--warehouse", wh, "--no-link", "--ntriples",
@@ -40,3 +44,7 @@ def test_spark_submit_py_files(tmp_path):
     assert res["counts"]["edges"] > 0
     assert os.path.exists(wh + "/ntriples/dataset=labels")
     assert os.path.exists(wh + "/lineage")
+    # the submitter's conf wins; every other spark.sql default is the engine's
+    assert res["conf"]["spark.sql.shuffle.partitions"] == "8"
+    assert (res["conf"]["spark.sql.autoBroadcastJoinThreshold"]
+            == DEFAULT_CONF["spark.sql.autoBroadcastJoinThreshold"])
