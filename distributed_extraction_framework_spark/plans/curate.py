@@ -5,7 +5,7 @@ metrics / resume bookkeeping as the KG pipeline.
 The reference's orchestration (DistExtraction.scala:40-46) chains
 extraction stages; a web-scale training-data pipeline chains curation
 stages over the same corpus, and needs the identical operational story:
-per-stage parquet snapshots whose atomic ``_SUCCESS`` commit is the
+per-stage parquet snapshots whose ``_schema.json`` sidecar is the
 completion marker, a per-(run, stage, partition) lineage ledger, and
 resume-by-fingerprint so a crashed 100 TB run restarts where it died
 instead of re-cleaning a week of input. This module reuses
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..operators.curation import gopher_verdict
 from ..operators.dedup import exact_dedup
 from ..operators.scrub import _pii_scrubbed, normalize_unicode
-from .pipeline import Pipeline
+from .pipeline import Pipeline, config_digest
 
 
 @dataclass
@@ -58,28 +58,28 @@ class CurationConfig:
 
 
 class CurationPipeline(Pipeline):
-    """Shares Pipeline's stage protocol (fingerprint, _SUCCESS-as-marker,
-    lineage rows, resume) — only the DAG body differs. Construct with a
-    :class:`CurationConfig` (bookkeeping only touches ``cfg.warehouse``).
+    """Shares Pipeline's stage protocol (fingerprint, schema sidecar as
+    marker, lineage rows, resume) — only the DAG body and the config
+    signature differ. Construct with a :class:`CurationConfig`
+    (bookkeeping only touches ``cfg.warehouse``).
     """
 
-    def run(self, docs: DataFrame) -> dict[str, DataFrame]:
-        import hashlib
-
-        cfg = self.cfg
-        # resume key = input fingerprint ⊕ config digest: unlike the KG
-        # DAG (whose stage bodies are config-light), EVERY curation stage
-        # is parameterized (thresholds, flags, capacity) — resuming a
-        # warehouse after a config change must REBUILD, not silently
-        # return snapshots computed under the old settings
-        cfg_sig = hashlib.md5(repr((
-            cfg.normalize, cfg.scrub,
-            sorted((cfg.gopher or {}).items()) if cfg.gopher is not None
+    def _config_sig(self) -> str:
+        """Every curation knob (thresholds, flags, capacity, columns):
+        resuming a warehouse after a config change must REBUILD, not
+        silently return snapshots computed under the old settings."""
+        c = self.cfg
+        return config_digest((
+            c.normalize, c.scrub,
+            sorted((c.gopher or {}).items()) if c.gopher is not None
             else None,
-            cfg.fuzzy, cfg.minhash_threshold, cfg.pack_seq_len,
-            cfg.id_col, cfg.text_col,
-        )).encode()).hexdigest()[:8]
-        fp = f"{self._fingerprint(docs)}-{cfg_sig}"
+            c.fuzzy, c.minhash_threshold, c.pack_seq_len,
+            c.id_col, c.text_col,
+        ))
+
+    def run(self, docs: DataFrame) -> dict[str, DataFrame]:
+        cfg = self.cfg
+        fp = f"{self._fingerprint(docs)}-{self._config_sig()}"
         out: dict[str, DataFrame] = {}
 
         def build_hygiene() -> DataFrame:
@@ -140,5 +140,4 @@ class CurationPipeline(Pipeline):
                 "docs_packed", fp, build_packed,
             )
 
-        self._flush_lineage()
         return out

@@ -413,6 +413,16 @@ def predicates_table(quads: DataFrame) -> DataFrame:
     )
 
 
+# the graph tables as (name, builder, partition columns), in write order;
+# the pipeline takes each table's schema sidecar from the same builders
+GRAPH_TABLES = (
+    ("edges", edges_table, ["dataset"]),
+    ("literals", literals_table, ["dataset"]),
+    ("nodes", nodes_table, None),
+    ("predicates", predicates_table, None),
+)
+
+
 def write_graph_tables(
     quads: DataFrame,
     warehouse: str,
@@ -448,14 +458,9 @@ def write_graph_tables(
                 f"in the catalog warehouse — pass that path (or rebuild the "
                 f"session with iceberg_warehouse={warehouse!r})"
             )
-    tables = {
-        "edges": (edges_table(quads), ["dataset"]),
-        "literals": (literals_table(quads), ["dataset"]),
-        "nodes": (nodes_table(quads), None),
-        "predicates": (predicates_table(quads), None),
-    }
     counts: dict[str, int] = {}
-    for name, (df, part_cols) in tables.items():
+    for name, build, part_cols in GRAPH_TABLES:
+        df = build(quads)
         if table_format == "iceberg":
             writer = df.writeTo(f"{catalog}.graph.{name}").using("iceberg")
             if part_cols:

@@ -6,8 +6,10 @@ parse-cache (DistIOUtils RDD checkpoint — K3), and the accumulator
 counters (C3). Spark-native redesign:
 
 * each stage materializes to ``{warehouse}/{stage}`` parquet (Iceberg
-  snapshot on a real cluster) — the atomic ``_SUCCESS`` commit IS the
-  marker file;
+  snapshot on a real cluster) plus a ``_schema.json`` sidecar written
+  after the data commit — the sidecar IS the marker file, and every
+  read-back (this run and resumes) goes through it: no schema-inference
+  job, partition columns keep their written types;
 * a ``lineage`` table gets one row per (run, stage, partition): row
   counts per output partition, wall time, input fingerprint, status —
   the north_rule per-partition lineage;
@@ -21,6 +23,8 @@ counters (C3). Spark-native redesign:
 
 from __future__ import annotations
 
+import hashlib
+import json
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -28,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+from pyspark.sql.types import StructType
 
 from .. import schema as S
 from ..operators import extractors as X
@@ -43,6 +48,12 @@ LINEAGE_SCHEMA = ("run_id string, stage string, partition string, "
                   "n_rows bigint, wall_ms bigint, input_fingerprint string, "
                   "status string, ts bigint")
 METRICS_SCHEMA = "run_id string, metric string, value bigint, ts bigint"
+
+
+def config_digest(values: tuple) -> str:
+    """The 8-hex config signature ``_config_sig`` folds into every stage
+    fingerprint (md5 of the tuple's repr, as warehouses already hold)."""
+    return hashlib.md5(repr(values).encode()).hexdigest()[:8]
 
 
 @dataclass
@@ -113,8 +124,6 @@ class Pipeline:
             files = sorted(pages.inputFiles())
         except Exception:
             files = []
-        import hashlib
-
         parts = ["|".join(files), str(len(files)),
                  pages.schema.simpleString()]
         if not files:
@@ -154,18 +163,16 @@ class Pipeline:
         only the WebKG subclass did this). ``output_formats`` is NOT in
         this signature — no quad stage depends on it; the exports stage
         keys on its own (key, serializer) pairs so a format change
-        re-exports without rebuilding the DAG."""
-        import hashlib
-
+        re-exports without rebuilding the DAG (``_export``). The other
+        DAGs override this with their own config tuple."""
         c = self.cfg
         ont = sorted(c.ontology) if c.ontology else None
-        sig = repr((
+        return config_digest((
             sorted(c.extractors) if c.extractors else None,
             tuple(c.resolve_datasets), c.link_entities, c.canonicalize,
             c.use_disambiguation_set, c.salt_buckets, c.partition_by_lang,
             bool(c.shapes), ont, c.normalize_units,
         ))
-        return hashlib.md5(sig.encode()).hexdigest()[:8]
 
     def _stage_path(self, stage: str) -> str:
         return f"{self.cfg.warehouse}/{stage}"
@@ -188,11 +195,11 @@ class Pipeline:
             self._lineage_cache = []
             path = self._stage_path("lineage")
             if self._exists(path):
+                lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(path)
                 self._lineage_cache = [
-                    tuple(r) for r in self.spark.read.parquet(path)
-                    .select("stage", "partition", "n_rows",
-                            "input_fingerprint", "status")
-                    .collect()
+                    tuple(r) for r in lineage.select(
+                        "stage", "partition", "n_rows", "input_fingerprint",
+                        "status").collect()
                 ]
         return self._lineage_cache
 
@@ -209,11 +216,13 @@ class Pipeline:
 
     def _stage_row_total(self, stage: str, fingerprint: str) -> int:
         """Total output rows of a completed stage, summed from its lineage
-        partition rows — no data re-scan."""
-        return sum(
-            n for (s, _p, n, f, st) in self._lineage_records()
+        partition rows — no data re-scan. A stage rebuilt under the same
+        fingerprint (its sidecar was gone) holds its rows twice, so each
+        partition counts once."""
+        return sum({
+            p: n for (s, p, n, f, st) in self._lineage_records()
             if s == stage and st == "complete" and f == fingerprint
-        )
+        }.values())
 
     def _hadoop_path(self, path: str):
         """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
@@ -225,8 +234,11 @@ class Pipeline:
         return fs.exists(p)
 
     def _committed(self, stage: str, fingerprint: str) -> bool:
-        """Stage output exists AND lineage says it completed for this input."""
-        return (self._exists(self._stage_path(stage) + "/_SUCCESS")
+        """Stage schema sidecar exists AND lineage says it completed for
+        this input. The sidecar is written after the data commit, so a
+        directory without one (a crash between the two, or a stage from
+        before sidecars) is rebuilt, never read by inference."""
+        return (self._exists(self._stage_path(stage) + "/_schema.json")
                 and self._lineage_complete(stage, fingerprint))
 
     def _record(self, stage: str, partition: str, n_rows: int, wall_ms: int,
@@ -254,22 +266,18 @@ class Pipeline:
         stream.close()
 
     def _read_stage(self, path: str) -> DataFrame:
+        """A committed stage read through its ``_schema.json`` sidecar."""
+        fs, p = self._hadoop_path(path + "/_schema.json")
+        stream = fs.open(p)
         try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            from pyspark.sql.types import StructType
-
-            fs, p = self._hadoop_path(path + "/_schema.json")
-            stream = fs.open(p)
-            try:
-                raw = bytes(
-                    self.spark._jvm.org.apache.commons.io.IOUtils
-                    .toByteArray(stream)
-                )
-            finally:
-                stream.close()
-            schema = StructType.fromJson(__import__("json").loads(raw))
-            return self.spark.read.schema(schema).parquet(path)
+            raw = bytes(
+                self.spark._jvm.org.apache.commons.io.IOUtils
+                .toByteArray(stream)
+            )
+        finally:
+            stream.close()
+        schema = StructType.fromJson(json.loads(raw))
+        return self.spark.read.schema(schema).parquet(path)
 
     def _run_stage(
         self,
@@ -279,7 +287,12 @@ class Pipeline:
         partition_col: str | None = None,
         partition_by: str | None = None,
     ) -> DataFrame:
-        """Run-or-resume one stage; returns the stage output DataFrame."""
+        """Run-or-resume one stage; returns the stage output DataFrame.
+
+        A fresh stage writes its parquet, then its ``_schema.json``
+        sidecar (the commit marker ``_committed`` checks), then its
+        lineage rows. Both a fresh and a resumed stage are read back
+        through the sidecar schema, so no read runs an inference job."""
         path = self._stage_path(stage)
         if self._committed(stage, fingerprint):
             return self._read_stage(path)
@@ -299,10 +312,10 @@ class Pipeline:
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(path)
-        # an EMPTY partitioned stage writes _SUCCESS but zero part files;
-        # persist the schema so read-back (this run and resumes) can't hit
-        # UNABLE_TO_INFER_SCHEMA — a degenerate-but-legal corpus (e.g. all
-        # captures are redirects → zero triples) must flow through the DAG
+        # the sidecar also carries an EMPTY partitioned stage (_SUCCESS
+        # but zero part files), which has no inferable schema — a
+        # degenerate-but-legal corpus (e.g. all captures are redirects →
+        # zero triples) must flow through the DAG
         self._write_stage_schema(path, df)
         out = self._read_stage(path)
         wall = int((time.time() - t0) * 1000)
@@ -323,6 +336,28 @@ class Pipeline:
                          fingerprint)
         self._flush_lineage()
         return out
+
+    def _export(self, quads: DataFrame, fp: str, rows_stage: str) -> None:
+        """K1: the multi-format export fan-out (N-Triples/N-Quads/Turtle/...
+        with suffix-implied codecs) of ``quads``, committed by one lineage
+        row. That row is keyed on the (key, serializer) PAIRS: adding a
+        format OR changing a key's serializer re-runs the fan-out without
+        rebuilding the DAG (keys-only keying kept a stale export on a
+        value change — code-review r5 wave-2 #9). The exported row count
+        is ``rows_stage``'s lineage total: correct on resumed runs too,
+        with no data re-scan."""
+        formats = self.cfg.output_formats
+        if not formats:
+            return
+        fmt_key = ",".join(f"{k}={v}" for k, v in sorted(formats.items()))
+        if self._lineage_complete("exports", fp, partition=fmt_key):
+            return
+        t0 = time.time()
+        M.write_formats(quads, self._stage_path("exports"), formats)
+        n_out = self._stage_row_total(rows_stage, fp)
+        self._record("exports", fmt_key, n_out,
+                     int((time.time() - t0) * 1000), fp)
+        self._flush_lineage()
 
     # -- the DAG ------------------------------------------------------------
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
@@ -451,47 +486,21 @@ class Pipeline:
                 "entity_links", fp, build_links
             )
 
-        # K1: multi-format export fan-out (N-Triples/N-Quads/Turtle/... with
-        # suffix-implied codecs) as a resumable stage of the DAG
-        if self.cfg.output_formats:
-            fmt_key = ",".join(
-                f"{k}={v}" for k, v in sorted(self.cfg.output_formats.items())
-            )
-            # keyed on the (key, serializer) PAIRS: adding a format OR
-            # changing a key's serializer re-runs the fan-out (keys-only
-            # keying kept a stale export on a value change — code-review
-            # r5 wave-2 #9)
-            if not self._lineage_complete("exports", fp, partition=fmt_key):
-                t0 = time.time()
-                M.write_formats(final, self._stage_path("exports"),
-                                self.cfg.output_formats)
-                # exported row count = the final quad stage's lineage total
-                # (correct on resumed runs too; no data re-scan)
-                n_out = self._stage_row_total(final_stage, fp)
-                self._record("exports", fmt_key, n_out,
-                             int((time.time() - t0) * 1000), fp)
-                self._flush_lineage()
+        self._export(final, fp, final_stage)
 
         t0 = time.time()
-        graph_builders = (
-            ("edges", M.edges_table), ("literals", M.literals_table),
-            ("nodes", M.nodes_table), ("predicates", M.predicates_table),
-        )
         if not self._committed("edges", fp):
             counts = M.write_graph_tables(final, self.cfg.warehouse)
-            # schema sidecars: an empty graph table (e.g. no edges under
-            # a literals-only extractor set) has no inferable parquet
-            # schema; the sidecar keeps the read-back total like every
-            # _run_stage output (the builder gives the schema without
-            # executing anything)
-            for name, builder in graph_builders:
+            # the four tables are one commit, checked on edges' sidecar
+            # (each builder gives its schema without executing anything)
+            for name, builder, _ in M.GRAPH_TABLES:
                 self._write_stage_schema(self._stage_path(name),
                                          builder(final))
             wall = int((time.time() - t0) * 1000)
             for name, n in counts.items():
                 self._record(name, "*", n, wall, fp)
             self._flush_lineage()
-        for name, _ in graph_builders:
+        for name, _, _ in M.GRAPH_TABLES:
             outputs[name] = self._read_stage(self._stage_path(name))
 
         # metrics table (the reference's accumulator report, C3): counters

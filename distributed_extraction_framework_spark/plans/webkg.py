@@ -5,9 +5,9 @@ The crawl-side counterpart of plans/pipeline.py's wiki DAG (reference:
 the extraction launcher's job graph, DistExtractionJob semantics —
 reference: extraction/src/main/scala/org/dbpedia/extraction/dump/extract/
 ExtractionJob.scala), sharing Pipeline's entire stage protocol verbatim
-(input⊕config fingerprint, parquet stage snapshots, _SUCCESS-as-marker,
-per-(run,stage,partition) lineage rows, resume-by-fingerprint, metrics).
-Only the DAG body differs:
+(input⊕config fingerprint, parquet stage snapshots, schema-sidecar-as-
+marker, per-(run,stage,partition) lineage rows, resume-by-fingerprint,
+one export commit). Only the DAG body and the config signature differ:
 
 1. ``web_pages`` (optional) — recrawl collapse: keep the newest capture
    per canonical URL (scrub.latest_capture argmax + a keeper semi-join;
@@ -35,7 +35,6 @@ touches only the (tiny) redirect pair set.
 
 from __future__ import annotations
 
-import hashlib
 import time
 from dataclasses import dataclass, field
 
@@ -46,8 +45,7 @@ from ..operators.redirects import transitive_closure
 from ..operators.scrub import latest_capture
 from ..operators.structured_data import web_page_triples
 from ..sources.warc import web_redirects
-from . import materialize as M
-from .pipeline import Pipeline
+from .pipeline import Pipeline, config_digest
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
@@ -113,18 +111,21 @@ class WebKGPipeline(Pipeline):
     ``http_location`` from sources/warc.read_warc]) and returns the
     stage-name → DataFrame dict like the other DAGs."""
 
+    def _config_sig(self) -> str:
+        """``output_formats`` deliberately absent: the exports stage keys
+        on its own (key, serializer) pairs, so a format change re-exports
+        without rebuilding the DAG; cdx knobs ARE here — cdx_files changes
+        the written index (code-review r5 wave-2 #9)."""
+        c = self.cfg
+        return config_digest((
+            c.latest_only, c.resolve_redirects,
+            c.url_col, c.skolem_base, c.fuse_literals,
+            c.cdx, c.cdx_files,
+        ))
+
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
         cfg = self.cfg
-        # output_formats deliberately absent: the exports stage keys on
-        # its own (key, serializer) pairs (below), so a format change
-        # re-exports without rebuilding the DAG; cdx knobs ARE here —
-        # cdx_files changes the written index (code-review r5 wave-2 #9)
-        cfg_sig = hashlib.md5(repr((
-            cfg.latest_only, cfg.resolve_redirects,
-            cfg.url_col, cfg.skolem_base, cfg.fuse_literals,
-            cfg.cdx, cfg.cdx_files,
-        )).encode()).hexdigest()[:8]
-        fp = f"{self._fingerprint(pages)}-{cfg_sig}"
+        fp = f"{self._fingerprint(pages)}-{self._config_sig()}"
         out: dict[str, DataFrame] = {}
 
         cur = pages
@@ -180,7 +181,7 @@ class WebKGPipeline(Pipeline):
             partition_col="obj_kind", partition_by="obj_kind",
         )
         out["web_triples"] = triples
-        final = triples
+        final, final_stage = triples, "web_triples"
 
         if closure is not None:
             def build_resolved() -> DataFrame:
@@ -205,8 +206,9 @@ class WebKGPipeline(Pipeline):
                     "obj", F.coalesce(F.col("_d2"), F.col("obj"))
                 ).drop("_s2", "_d2")
 
+            final_stage = "web_triples_resolved"
             final = self._run_stage(
-                "web_triples_resolved", fp, build_resolved,
+                final_stage, fp, build_resolved,
                 partition_col="obj_kind", partition_by="obj_kind",
             )
             out["web_triples_resolved"] = final
@@ -251,26 +253,8 @@ class WebKGPipeline(Pipeline):
 
             out["web_fused"] = self._run_stage("web_fused", fp, build_fused)
 
-        if cfg.output_formats:
-            # (key, serializer) pairs, not keys alone — a serializer
-            # change must re-export (code-review r5 wave-2 #9)
-            fmt_key = ",".join(
-                f"{k}={v}" for k, v in sorted(cfg.output_formats.items())
-            )
-            if not self._lineage_complete("exports", fp, partition=fmt_key):
-                t0 = time.time()
-                M.write_formats(
-                    triples_to_quads(final, cfg.skolem_base),
-                    self._stage_path("exports"), cfg.output_formats,
-                )
-                n_out = self._stage_row_total(
-                    "web_triples_resolved" if closure is not None
-                    else "web_triples", fp,
-                )
-                self._record("exports", fmt_key, n_out,
-                             int((time.time() - t0) * 1000), fp)
-                self._flush_lineage()
-
+        self._export(triples_to_quads(final, cfg.skolem_base), fp,
+                     final_stage)
         return out
 
 

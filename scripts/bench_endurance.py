@@ -9,6 +9,8 @@ OOM, driver materialization, unbounded buffers) that sf0.1 never
 approaches; there is no oracle — completion without OOM is the result.
 
 Prints ONE JSON line and appends it to ENDURANCE.json at the repo root.
+A missing corpus is written by a child process before this process starts
+Spark, so every run times ``extract_full`` on a cold JVM.
 
 Usage: python scripts/bench_endurance.py
   SPARK_GRAFT_ENDURANCE_PAGES (default 10_000_000)
@@ -19,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import threading
 import time
@@ -74,31 +77,47 @@ class PeakSampler(threading.Thread):
         self._halt.set()
 
 
-def main() -> None:
-    from distributed_extraction_framework_spark.operators import dedup as D
-    from distributed_extraction_framework_spark.operators.extractors import extract
+def _session(app_name: str):
     from distributed_extraction_framework_spark.session import get_spark
-    from distributed_extraction_framework_spark.sources.synth import write_pages
 
-    sampler = PeakSampler()
-    sampler.start()
-
-    spark = get_spark(
-        app_name="defs-endurance",
+    return get_spark(
+        app_name=app_name,
         master=f"local[{CPUS}]",
         shuffle_partitions=max(CPUS * 2, 64),
         extra_conf={"spark.ui.enabled": "false"},
     )
 
-    import pyspark.sql.functions as F
+
+def _write_corpus(path: str) -> None:
+    """Synthesize the N-page corpus into ``path`` (the child process)."""
+    from distributed_extraction_framework_spark.sources.synth import write_pages
+
+    write_pages(_session("defs-endurance-corpus"), N_PAGES, path,
+                partitions=max(CPUS * 8, 256))
+
+
+def main() -> None:
+    from distributed_extraction_framework_spark.operators import dedup as D
+    from distributed_extraction_framework_spark.operators.extractors import extract
+
+    sampler = PeakSampler()
+    sampler.start()
 
     phases: dict[str, float] = {}
     path = f"/tmp/defs_endurance_pages_{N_PAGES}"
 
     t0 = time.time()
     if not os.path.exists(path + "/_SUCCESS"):
-        write_pages(spark, N_PAGES, path, partitions=max(CPUS * 8, 256))
+        # in a child process: writing it in this JVM would warm the JIT
+        # for the extract_full timed below
+        subprocess.run([sys.executable, os.path.abspath(__file__),
+                        "--write-corpus", path], check=True)
     phases["synthesize_write"] = round(time.time() - t0, 1)
+
+    spark = _session("defs-endurance")
+
+    import pyspark.sql.functions as F
+
     pages = spark.read.parquet(path)
 
     t0 = time.time()
@@ -147,4 +166,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--write-corpus"]:
+        _write_corpus(sys.argv[2])
+    else:
+        main()
