@@ -1,16 +1,21 @@
 """The scaffolding every iterative operator shares: one pinned round, one
-broadcast gate, one round loop.
+byte gate, one round loop.
 
 * :func:`pin` eagerly ``localCheckpoint``s a frame with ``observe()``
   metrics attached, so the lineage cut and the driver-side scalars (a
   convergence count, a size probe) come from ONE Spark job. On a
   multi-executor cluster ``localCheckpoint`` blocks die with their
   executor; this is the one place to swap in ``checkpoint()``.
-* :func:`gate` turns the :func:`size` metrics of a pin into the ``bc``
-  join hint. Checkpointed frames carry no statistics, so without it the
-  planner sort-merges a vertex-sized table against the graph every
-  round; past :data:`BROADCAST_BYTES` the shuffled join stays, which is
-  the unbounded-scale shape.
+* The byte gate reads the :func:`size` metrics of a pin and has three
+  outcomes. :func:`local` hands a pin that fits :data:`BROADCAST_BYTES`
+  to the driver as one Arrow table, for a caller that can solve its
+  whole fixpoint there (a broadcast collects the same table to the
+  driver anyway); the result goes back as a ``session.local_frame``, so
+  no round runs a Spark job. :func:`gate` turns the same test into the
+  ``bc`` join hint: checkpointed frames carry no statistics, so without
+  it the planner sort-merges a vertex-sized table against the graph
+  every round. Past the budget the shuffled join stays, which is the
+  unbounded-scale shape.
 * :func:`fixpoint` runs one pinned job per round until a stop rule holds.
 """
 
@@ -18,6 +23,7 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -40,11 +46,21 @@ def size(*keys: str) -> dict[str, Column]:
     return {"rows": F.count(F.lit(1)), "width": F.avg(width)}
 
 
+def _fits(m: dict) -> bool:
+    """rows × (avg key bytes + row overhead) fits :data:`BROADCAST_BYTES`."""
+    return m["rows"] * ((m["width"] or 0.0) + ROW_OVERHEAD_BYTES) <= BROADCAST_BYTES
+
+
 def gate(m: dict) -> Callable[[DataFrame], DataFrame]:
     """``bc`` for a table pinned with :func:`size`: a broadcast hint when
-    rows × (avg key bytes + row overhead) fits :data:`BROADCAST_BYTES`."""
-    est = m["rows"] * ((m["width"] or 0.0) + ROW_OVERHEAD_BYTES)
-    return F.broadcast if est <= BROADCAST_BYTES else (lambda df: df)
+    it fits the byte budget."""
+    return F.broadcast if _fits(m) else (lambda df: df)
+
+
+def local(pinned: DataFrame, m: dict) -> pa.Table | None:
+    """``pinned`` (sized with :func:`size`) collected to the driver as one
+    Arrow table when it fits the byte budget, else ``None``."""
+    return pinned.toArrow() if _fits(m) else None
 
 
 def fixpoint(

@@ -489,10 +489,11 @@ class Pipeline:
         self._export(final, fp, final_stage)
 
         t0 = time.time()
-        if not self._committed("edges", fp):
+        if not all(self._committed(name, fp) for name, _, _ in M.GRAPH_TABLES):
             counts = M.write_graph_tables(final, self.cfg.warehouse)
-            # the four tables are one commit, checked on edges' sidecar
-            # (each builder gives its schema without executing anything)
+            # the four tables are one commit, rebuilt unless every one has
+            # its sidecar (each builder gives its schema without executing
+            # anything)
             for name, builder, _ in M.GRAPH_TABLES:
                 self._write_stage_schema(self._stage_path(name),
                                          builder(final))

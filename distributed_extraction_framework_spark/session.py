@@ -117,7 +117,8 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
-    """Driver-side ``rows`` (tuples, positional) as a DataFrame of ``schema``.
+    """Driver-side ``rows`` (tuples, positional, or a ``pa.Table`` with
+    ``schema``'s column names) as a DataFrame of ``schema``.
 
     The rows go to the JVM as one Arrow table, so the plan is a Catalyst
     ``LocalRelation``: no PythonRDD job and no Python worker, whatever
@@ -127,10 +128,13 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.cast(arrow)
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
     return spark.createDataFrame(table, schema)
 
 

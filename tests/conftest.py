@@ -14,6 +14,25 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def both_tiers(monkeypatch):
+    """``run`` -> ``[run()]`` under the loop tier (gate closed for every
+    table, an empty one included) and the open-gate tier (broadcast
+    joins; the driver-local tier for ``transitive_closure`` and
+    ``connected_components``) of the shared byte gate."""
+    from distributed_extraction_framework_spark.operators import fixpoint
+
+    def run_both(run):
+        out = []
+        for cap in (-1, 1 << 30):
+            monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", cap)
+            out.append(run())
+        monkeypatch.undo()
+        return out
+
+    return run_both
+
+
 @pytest.fixture(scope="session")
 def pages_df(spark):
     from distributed_extraction_framework_spark.sources.synth import synth_pages

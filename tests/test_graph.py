@@ -73,18 +73,7 @@ def test_degrees_and_hubs(spark):
     assert top[0]["uri"] == "hub"
 
 
-def _both_tiers(monkeypatch, run):
-    """``run()`` under the shuffled tier (gate closed) and the broadcast
-    tier (gate wide open) of the shared byte gate."""
-    out = []
-    for cap in (0, 1 << 30):
-        monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", cap)
-        out.append(run())
-    monkeypatch.undo()
-    return out
-
-
-def test_pagerank_broadcast_tier_is_byte_gated(spark, monkeypatch):
+def test_pagerank_broadcast_tier_is_byte_gated(spark, monkeypatch, both_tiers):
     """ADVICE r3: the broadcast tier must gate on estimated bytes (rows x
     avg key width), not a row count that could broadcast ~1 GB of URIs."""
     uris = [(f"http://kg.example.org/resource/Node_{i:04d}",) for i in range(100)]
@@ -100,7 +89,7 @@ def test_pagerank_broadcast_tier_is_byte_gated(spark, monkeypatch):
         [(f"n{i}", f"n{(i * 7) % 20}") for i in range(20)], ["src", "dst"]
     )
     # ranks must be identical in either tier
-    lo, hi = _both_tiers(monkeypatch, lambda: {
+    lo, hi = both_tiers(lambda: {
         r["uri"]: round(r["rank"], 9)
         for r in pagerank(edges, iterations=4).collect()})
     assert lo == hi
@@ -135,13 +124,13 @@ def test_reachability_chain_dag_and_cycle(spark):
     assert got == {("a", "b"), ("b", "a")}  # no self-pairs
 
 
-def test_reachability_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
+def test_reachability_broadcast_and_shuffle_tiers_agree(spark, both_tiers):
     from distributed_extraction_framework_spark.operators.graph import reachability
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(17)], ["src", "dst"]
     )
-    sh, bc = _both_tiers(monkeypatch, lambda: {
+    sh, bc = both_tiers(lambda: {
         (r["src"], r["dst"]) for r in reachability(edges).collect()})
     assert bc == sh
     assert len(bc) == 17 * 18 // 2  # every (i<j) pair of an 18-node chain
@@ -471,7 +460,7 @@ def test_k_truss_four_clique(spark):
     assert set(got.values()) == {2}
 
 
-def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
+def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, both_tiers):
     """Every caller of the shared byte gate must produce IDENTICAL output
     in both tiers (the gate only changes the physical join strategy,
     never the computation — the loops are exact min/count/max
@@ -542,5 +531,5 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
         (lambda: hits(edges, iterations=3), 6),
         (lambda: truth_finder(claims, iterations=2), 6),
     ]:
-        lo, hi = _both_tiers(monkeypatch, lambda: rows(run(), nd))
+        lo, hi = both_tiers(lambda: rows(run(), nd))
         assert lo and lo == hi

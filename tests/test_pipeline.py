@@ -713,3 +713,35 @@ def test_stage_without_sidecar_is_rebuilt(spark, tmp_path):
     exported = [r["n_rows"] for r in spark.read.parquet(wh + "/lineage")
                 .filter(F.col("stage") == "exports").collect()]
     assert exported == [final[0]]
+
+
+def test_graph_table_without_sidecar_is_rebuilt(spark, tmp_path):
+    """The four graph tables are one commit: a resume where any one of
+    them lost its ``_schema.json`` rebuilds all four (it used to check
+    only ``edges`` and then fail reading the others back). The rebuild
+    equals the first build, and each table's lineage total counts its
+    rows once although the lineage now holds them twice."""
+    from distributed_extraction_framework_spark.plans import materialize as M
+    from distributed_extraction_framework_spark.plans.pipeline import (
+        Pipeline, PipelineConfig,
+    )
+    from distributed_extraction_framework_spark.sources.synth import synth_pages
+
+    pages = synth_pages(spark, 30, partitions=2)
+    wh = str(tmp_path / "wh")
+    cfg = PipelineConfig(warehouse=wh, link_entities=False,
+                         canonicalize=False, use_disambiguation_set=False)
+    names = [name for name, _, _ in M.GRAPH_TABLES]
+    p1 = Pipeline(spark, cfg)
+    first = {n: _digest(df) for n, df in p1.run(pages).items() if n in names}
+    fp = f"{p1._fingerprint(pages)}-{p1._config_sig()}"
+    totals = {n: p1._stage_row_total(n, fp) for n in names}
+    assert totals["predicates"] > 0
+    assert totals == {n: first[n][0] for n in names}
+    os.remove(wh + "/predicates/_schema.json")
+    p2 = Pipeline(spark, cfg)
+    out = p2.run(pages)
+    assert {n: _digest(out[n]) for n in names} == first
+    assert os.path.exists(wh + "/predicates/_schema.json")
+    assert sum(1 for r in p2._lineage_records() if r[0] == "predicates") == 2
+    assert {n: p2._stage_row_total(n, fp) for n in names} == totals

@@ -5,6 +5,7 @@ equality) plus chain/cycle semantics of the upstream resolveMap."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_extraction_framework_spark import schema as S
@@ -123,36 +124,47 @@ def test_connected_components_on_sameas(spark, pages_df):
 def test_connected_components_one_action_per_round(spark, monkeypatch):
     """VERDICT r3 #4: convergence is an observe() metric collected by the
     per-round checkpoint job — the old second labels-vs-labels join +
-    ``.count()`` action per round must be gone. Spy on the ONLY action
-    entry points a convergence probe could use (count / collect): the
-    broadcast-gate size probe rides the label table's pin too, so no
-    DataFrame action runs at all; anything per-round would add one entry
-    per iteration (this star graph runs ≥2 rounds)."""
+    ``.count()`` action per round must be gone. Spy on every action entry
+    point a convergence probe or the local tier could use (count /
+    collect / toLocalIterator / toArrow). With the gate closed the size
+    probes ride the pins, so no DataFrame action runs at all; anything
+    per-round would add one entry per iteration (this star graph runs ≥2
+    rounds). Under the default gate the local tier collects the edge
+    table once with ``toArrow`` and runs no other action."""
+    from distributed_extraction_framework_spark.operators import fixpoint
+
     rows = [("z", "a"), ("z", "b"), ("z", "c"), ("z", "d")]
     edges = spark.createDataFrame(rows, ["src", "dst"])
     DataFrame = type(edges)
-    calls = []
-    for name in ("count", "collect", "toLocalIterator"):
-        orig = getattr(DataFrame, name)
 
-        def spy(self, *a, _orig=orig, _name=name, **kw):
-            calls.append(_name)
-            return _orig(self, *a, **kw)
+    def actions(cap):
+        calls = []
+        monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", cap)
+        for name in ("count", "collect", "toLocalIterator", "toArrow"):
+            orig = getattr(DataFrame, name)
 
-        monkeypatch.setattr(DataFrame, name, spy)
-    labels = connected_components(edges)
-    monkeypatch.undo()
-    assert calls == [], f"no DataFrame action may run, saw {calls}"
-    comp = {r["vertex"]: r["component"] for r in labels.collect()}
-    assert set(comp.values()) == {"a"}
+            def spy(self, *a, _orig=orig, _name=name, **kw):
+                calls.append(_name)
+                return _orig(self, *a, **kw)
+
+            monkeypatch.setattr(DataFrame, name, spy)
+        labels = connected_components(edges)
+        monkeypatch.undo()
+        comp = {r["vertex"]: r["component"] for r in labels.collect()}
+        assert set(comp.values()) == {"a"}
+        return calls
+
+    assert actions(0) == [], "no DataFrame action may run"
+    assert actions(fixpoint.BROADCAST_BYTES) == ["toArrow"]
 
 
 def test_one_job_per_round(spark, monkeypatch):
     """Each ``fixpoint`` round is ONE Spark job: the round's pin also
-    observes its convergence metric, and the broadcast gate reads its size
+    observes its convergence metric, and the byte gate reads its size
     probe off the setup pin, so no count or size-probe job runs beside
     them. Shuffled tier and AQE off, so every job is an action (no
-    broadcast-collect or query-stage jobs)."""
+    broadcast-collect or query-stage jobs). Under the default gate the
+    local tier runs no per-round job at all."""
     from distributed_extraction_framework_spark.operators import fixpoint
 
     sc = spark.sparkContext
@@ -182,5 +194,76 @@ def test_one_job_per_round(spark, monkeypatch):
         # 2 setup pins (edges, labels); the min label walks one hop per
         # round along the n-edge path, then 1 round changes nothing
         assert jobs("cc_rounds", lambda: connected_components(path)) == 2 + n + 1
+        # local tier under the default gate: the sizing pin plus toArrow
+        monkeypatch.undo()
+        assert jobs("tc_local", lambda: transitive_closure(chain)) <= 2
+        assert jobs("cc_local", lambda: connected_components(path)) <= 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _tiers_agree(both_tiers, run):
+    """``run()``'s schema and rows as a sorted multiset, equal under the
+    loop tier and the local tier, which must answer from the driver (a
+    ``LocalRelation``); returns the local tier's."""
+    def answer():
+        df = run()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return ("LocalRelation" in plan, df.schema.simpleString(),
+                sorted(map(tuple, df.collect())))
+
+    (loop_local, *loop), (local, *loc) = both_tiers(answer)
+    assert (loop_local, local) == (False, True) and loop == loc
+    return loc
+
+
+def test_closure_tiers_agree_as_multisets(spark, both_tiers):
+    """The driver-local pointer doubling is the loop tier's exact twin:
+    a duplicated src fans out, null endpoints drop, 2- and 4-cycles drop,
+    a chain longer than 2^max_iter stops at the same partial state
+    without raising, non-ASCII URIs pass through, and an empty input
+    keeps its schema."""
+    rows = [
+        ("A", "B"), ("A", "B"), ("A", "E"), ("B", "C"), ("C", "D"),
+        ("N", None), (None, "M"),
+        ("X", "Y"), ("Y", "X"),
+        ("c1", "c2"), ("c2", "c3"), ("c3", "c4"), ("c4", "c1"), ("t", "c1"),
+        ("Ä", "Z"), ("Z", "a"), ("é", "Ä"),
+    ] + [(f"l{i:02d}", f"l{i + 1:02d}") for i in range(11)]
+    df = spark.createDataFrame(rows, "src string, dst string")
+    got = _tiers_agree(both_tiers, lambda: transitive_closure(df))[1]
+    assert got.count(("A", "D")) == 2 and ("A", "E") in got
+    assert not any(s in ("N", None, "X", "Y", "c1") for s, _ in got)
+    assert ("é", "a") in got
+    # 11 hops at max_iter=2: each link has jumped at most 4 hops
+    assert ("l00", "l04") in _tiers_agree(
+        both_tiers, lambda: transitive_closure(df, max_iter=2))[1]
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert _tiers_agree(both_tiers, lambda: transitive_closure(empty)) == [
+        "struct<src:string,dst:string>", []]
+
+
+def test_connected_components_tiers_agree(spark, both_tiers):
+    """Driver-local min-label CC against the loop tier: byte-order
+    minimum on non-ASCII URIs (``Z`` < ``a`` < ``Ä`` < ``é``, unlike a
+    case-folded order), the same cap behaviour on a path longer than
+    max_iter, and the empty schema."""
+    rows = [("é", "a"), ("a", "Ä"), ("Ä", "Z"), ("q", "r"), ("s", None)] + [
+        (f"p{i}", f"p{i + 1}") for i in range(6)]
+    df = spark.createDataFrame(rows, "src string, dst string")
+    comp = dict(_tiers_agree(both_tiers, lambda: connected_components(df))[1])
+    assert comp["é"] == "Z" and comp["r"] == "q"
+    comp = dict(_tiers_agree(
+        both_tiers, lambda: connected_components(df, max_iter=3, strict=False))[1])
+    assert comp["p6"] == "p3"
+
+    def message():
+        with pytest.raises(RuntimeError) as err:
+            connected_components(df, max_iter=3)
+        return str(err.value)
+
+    loop, loc = both_tiers(message)
+    assert loop == loc and "did not converge in 3 rounds" in loc
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert _tiers_agree(both_tiers, lambda: connected_components(empty)) == [
+        "struct<vertex:string,component:string>", []]
