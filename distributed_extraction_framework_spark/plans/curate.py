@@ -5,8 +5,9 @@ metrics / resume bookkeeping as the KG pipeline.
 The reference's orchestration (DistExtraction.scala:40-46) chains
 extraction stages; a web-scale training-data pipeline chains curation
 stages over the same corpus, and needs the identical operational story:
-per-stage parquet snapshots whose ``_schema.json`` sidecar is the
-completion marker, a per-(run, stage, partition) lineage ledger, and
+per-stage parquet snapshots whose ``_schema.json`` record names the
+fingerprint each was built for and its row counts (the one completion
+marker), a per-(run, stage, partition) lineage log, and
 resume-by-fingerprint so a crashed 100 TB run restarts where it died
 instead of re-cleaning a week of input. This module reuses
 :class:`plans.pipeline.Pipeline`'s bookkeeping verbatim (one stage
@@ -23,10 +24,11 @@ protocol across both DAGs) and swaps in the curation stages:
 * ``docs_neardup_free`` (optional) — MinHash/LSH fuzzy dedup;
 * ``docs_packed`` (optional) — concat-and-chunk sequence packing.
 
-Every stage's output row counts land in the shared ``lineage`` table;
-re-running with the same warehouse + input fingerprint loads snapshots
-instead of recomputing (driver gate ``curation_pipeline`` runs the DAG
-twice and hash-checks the ledger against SQL-recomputed stage counts).
+Every stage's output row counts land in its record and in the shared,
+append-only ``lineage`` table; re-running with the same warehouse + input
+fingerprint loads snapshots instead of recomputing (driver gate
+``curation_pipeline`` runs the DAG twice and hash-checks the ledger
+against SQL-recomputed stage counts).
 """
 
 from __future__ import annotations
@@ -58,8 +60,8 @@ class CurationConfig:
 
 
 class CurationPipeline(Pipeline):
-    """Shares Pipeline's stage protocol (fingerprint, schema sidecar as
-    marker, lineage rows, resume) — only the DAG body and the config
+    """Shares Pipeline's stage protocol (fingerprint, one commit record
+    per stage, lineage log, resume) — only the DAG body and the config
     signature differ. Construct with a :class:`CurationConfig`
     (bookkeeping only touches ``cfg.warehouse``).
     """
@@ -140,4 +142,5 @@ class CurationPipeline(Pipeline):
                 "docs_packed", fp, build_packed,
             )
 
+        self._write_metrics([])
         return out

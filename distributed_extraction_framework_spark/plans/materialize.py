@@ -66,12 +66,15 @@ def render_ntriples(quads: DataFrame, quad_form: bool = False) -> DataFrame:
     )
 
 
-def _write_marked_text(
-    lines: DataFrame, path: str, compression: str | None, started_ts: str,
-    file_header: list[str] | None = None,
+def _write_text(
+    lines: DataFrame, path: str, compression: str | None,
+    markers_ts: str | None, file_header: list[str] | None = None,
 ) -> None:
-    """Per-file ``# started/completed`` comment marker lines — the
-    reference's in-file completion protocol
+    """The text sinks' shared tail: (dataset, line) rows as one
+    ``partitionBy("dataset")`` text write with an optional codec, or with
+    ``markers_ts`` set, per-file ``# started/completed`` comment marker
+    lines (``file_header`` follows the started line) — the reference's
+    in-file completion protocol
     (DBpediaDatasetOutputFormat.scala:101-115 writes a started header and
     completed footer comment into every output file).
 
@@ -88,13 +91,19 @@ def _write_marked_text(
     opened and closed cleanly). Comment lines never change dataset
     content: diff harnesses strip them (reference run-extraction-test:25).
     """
+    if not markers_ts:
+        w = lines.write.mode("overwrite")
+        if compression:
+            w = w.option("compression", compression)
+        w.partitionBy("dataset").text(path)
+        return
     import pandas as pd
 
     lines = lines.localCheckpoint(eager=True)
     datasets = sorted(
         r["dataset"] for r in lines.select("dataset").distinct().collect()
     )
-    head = [f"# started {started_ts}"] + list(file_header or [])
+    head = [f"# started {markers_ts}"] + list(file_header or [])
 
     def mark(batches):
         from datetime import datetime, timezone
@@ -127,15 +136,9 @@ def write_ntriples(
     ``compression='gzip'`` mirrors the reference's ``format.nt.gz``
     codec-inferred outputs (MultipleTextOutputFormat.scala:57-96);
     ``markers_ts`` adds the reference's per-file started/completed comment
-    lines (``_write_marked_text`` — order-exact, no partition sort)."""
-    lines = render_ntriples(quads, quad_form)
-    if markers_ts:
-        _write_marked_text(lines, path, compression, markers_ts)
-        return
-    w = lines.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.partitionBy("dataset").text(path)
+    lines (``_write_text`` — order-exact, no partition sort)."""
+    _write_text(render_ntriples(quads, quad_form), path, compression,
+                markers_ts)
 
 
 # --------------------------------------------------------------------------
@@ -219,13 +222,7 @@ def write_turtle(
     header = "\n".join(
         f"@prefix {p}: <{ns}> ." for p, ns in _turtle_prefixes()
     )
-    if markers_ts:
-        _write_marked_text(
-            render_turtle(quads, quad_form), path, compression, markers_ts,
-            file_header=header.split("\n"),
-        )
-        return
-    lines = render_turtle(quads, quad_form).repartition("dataset")
+    lines = render_turtle(quads, quad_form)
 
     def prepend(batches):
         seen: set[str] = set()
@@ -246,11 +243,10 @@ def write_turtle(
             else:
                 yield pdf
 
-    out = lines.mapInPandas(prepend, schema="dataset string, line string")
-    w = out.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.partitionBy("dataset").text(path)
+    if not markers_ts:
+        lines = lines.repartition("dataset").mapInPandas(
+            prepend, schema="dataset string, line string")
+    _write_text(lines, path, compression, markers_ts, header.split("\n"))
 
 
 # --------------------------------------------------------------------------
@@ -309,14 +305,7 @@ def write_trix(
     compression: str | None = None,
     markers_ts: str | None = None,
 ) -> None:
-    lines = render_trix(quads, quad_form)
-    if markers_ts:
-        _write_marked_text(lines, path, compression, markers_ts)
-        return
-    w = lines.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.partitionBy("dataset").text(path)
+    _write_text(render_trix(quads, quad_form), path, compression, markers_ts)
 
 
 # --------------------------------------------------------------------------

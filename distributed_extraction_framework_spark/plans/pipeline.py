@@ -6,18 +6,26 @@ parse-cache (DistIOUtils RDD checkpoint — K3), and the accumulator
 counters (C3). Spark-native redesign:
 
 * each stage materializes to ``{warehouse}/{stage}`` parquet (Iceberg
-  snapshot on a real cluster) plus a ``_schema.json`` sidecar written
-  after the data commit — the sidecar IS the marker file, and every
-  read-back (this run and resumes) goes through it: no schema-inference
-  job, partition columns keep their written types;
-* a ``lineage`` table gets one row per (run, stage, partition): row
-  counts per output partition, wall time, input fingerprint, status —
-  the north_rule per-partition lineage;
+  snapshot on a real cluster). Its ``_schema.json`` sidecar is the ONE
+  commit record (the marker file): the StructType JSON plus the
+  ``fingerprint`` the output was built for and its ``rows`` per
+  partition. Completion, row totals and resume read only that file, and
+  every read-back goes through its schema: no schema-inference job,
+  partition columns keep their written types;
+* ``Pipeline._commit`` is the one commit path of every output (stages,
+  the four graph tables, the export fan-out, WebKG's CDX index): delete
+  the old record, write the data, append the lineage rows, rename the
+  new record into place. A failure at any step leaves no record naming
+  the build, so the next run rebuilds it;
+* a ``lineage`` table gets one row per (run, output, partition): row
+  counts per output partition, wall time, fingerprint, status — the
+  north_rule per-partition lineage, an append-only log the pipeline
+  never reads back;
 * a ``metrics`` table records the C3-style counters (pages in, quads
   out, failures) captured via ``observe()`` — executor-side, no extra
-  action;
-* **resume**: a re-run skips every stage whose output commit exists for
-  the same input fingerprint, loading the snapshot instead (checkpoint
+  action; a run that built nothing records one ``resumed`` row;
+* **resume**: a re-run skips every output whose record names the same
+  input⊕config fingerprint, loading the snapshot instead (checkpoint
   restart = delete nothing, just run again).
 """
 
@@ -32,7 +40,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import schema as S
 from ..operators import extractors as X
@@ -43,11 +51,14 @@ from ..session import local_frame
 from . import materialize as M
 
 # bigint counters, as lineage tables of earlier versions hold them, so
-# existing warehouses append and resume unchanged
+# existing warehouses keep appending
 LINEAGE_SCHEMA = ("run_id string, stage string, partition string, "
                   "n_rows bigint, wall_ms bigint, input_fingerprint string, "
                   "status string, ts bigint")
 METRICS_SCHEMA = "run_id string, metric string, value bigint, ts bigint"
+# the schema a text output (exports, the CDX index) records: what
+# spark.read.text gives back
+TEXT_SCHEMA = StructType([StructField("value", StringType())])
 
 
 def config_digest(values: tuple) -> str:
@@ -92,14 +103,7 @@ class Pipeline:
         self.spark = spark
         self.cfg = config
         self.run_id = uuid.uuid4().hex[:12]
-        self._lineage_rows: list[tuple] = []
-        self._fresh: set[str] = set()  # stages BUILT this run (not resumed)
-        # driver-side mirror of the lineage table (stage, partition,
-        # n_rows, input_fingerprint, status): lineage is stage×partition-
-        # sized (never corpus-sized), so ONE read at first use replaces a
-        # parquet read + filter + count JOB per completion check — the
-        # resume path of a 5-stage DAG paid ~10 such jobs per run
-        self._lineage_cache: list[tuple] | None = None
+        self._fresh: set[str] = set()  # outputs BUILT this run (not resumed)
 
     # -- bookkeeping --------------------------------------------------------
     def _fingerprint(self, pages: DataFrame) -> str:
@@ -177,97 +181,19 @@ class Pipeline:
     def _stage_path(self, stage: str) -> str:
         return f"{self.cfg.warehouse}/{stage}"
 
-    def _lineage_records(self) -> list[tuple]:
-        """(stage, partition, n_rows, input_fingerprint, status) rows —
-        the persisted lineage table read ONCE per Pipeline instance plus
-        everything recorded by this run (``_record`` keeps the mirror in
-        sync). All completion/total checks answer from this driver-side
-        list instead of a parquet read + filter + count job each.
-
-        Assumes ONE writer per warehouse: the mirror is never re-read,
-        so lineage that another Pipeline instance or process appends
-        after the first read is invisible to this one. It may then re-run
-        a stage the other writer already committed, or resume a stage
-        whose directory the other writer has since overwritten for a
-        different input fingerprint. Run one Pipeline per warehouse at
-        a time."""
-        if self._lineage_cache is None:
-            self._lineage_cache = []
-            path = self._stage_path("lineage")
-            if self._exists(path):
-                lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-                self._lineage_cache = [
-                    tuple(r) for r in lineage.select(
-                        "stage", "partition", "n_rows", "input_fingerprint",
-                        "status").collect()
-                ]
-        return self._lineage_cache
-
-    def _lineage_complete(self, stage: str, fingerprint: str,
-                          partition: str | None = None) -> bool:
-        """``partition`` pins the check to one lineage partition row — the
-        exports stage passes its format set there, so ADDING a format to
-        the config re-runs the stage instead of silently skipping it."""
-        return any(
-            s == stage and st == "complete" and f == fingerprint
-            and (partition is None or p == partition)
-            for (s, p, _n, f, st) in self._lineage_records()
-        )
-
-    def _stage_row_total(self, stage: str, fingerprint: str) -> int:
-        """Total output rows of a completed stage, summed from its lineage
-        partition rows — no data re-scan. A stage rebuilt under the same
-        fingerprint (its sidecar was gone) holds its rows twice, so each
-        partition counts once."""
-        return sum({
-            p: n for (s, p, n, f, st) in self._lineage_records()
-            if s == stage and st == "complete" and f == fingerprint
-        }.values())
-
-    def _hadoop_path(self, path: str):
-        """(FileSystem, Path) of ``path`` under the session's Hadoop conf."""
-        p = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+    def _record_file(self, name: str):
+        """(FileSystem, Path) of output ``name``'s commit record."""
+        p = self.spark._jvm.org.apache.hadoop.fs.Path(
+            f"{self._stage_path(name)}/_schema.json")
         return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
 
-    def _exists(self, path: str) -> bool:
-        fs, p = self._hadoop_path(path)
-        return fs.exists(p)
-
-    def _committed(self, stage: str, fingerprint: str) -> bool:
-        """Stage schema sidecar exists AND lineage says it completed for
-        this input. The sidecar is written after the data commit, so a
-        directory without one (a crash between the two, or a stage from
-        before sidecars) is rebuilt, never read by inference."""
-        return (self._exists(self._stage_path(stage) + "/_schema.json")
-                and self._lineage_complete(stage, fingerprint))
-
-    def _record(self, stage: str, partition: str, n_rows: int, wall_ms: int,
-                fingerprint: str, status: str = "complete") -> None:
-        self._lineage_rows.append(
-            (self.run_id, stage, partition, n_rows, wall_ms, fingerprint,
-             status, int(time.time() * 1000))
-        )
-        # keep the driver-side mirror consistent with what will be flushed
-        self._lineage_records().append(
-            (stage, partition, n_rows, fingerprint, status)
-        )
-
-    def _flush_lineage(self) -> None:
-        if not self._lineage_rows:
-            return
-        local_frame(self.spark, self._lineage_rows, LINEAGE_SCHEMA).write.mode(
-            "append").parquet(self._stage_path("lineage"))
-        self._lineage_rows = []
-
-    def _write_stage_schema(self, path: str, df: DataFrame) -> None:
-        fs, p = self._hadoop_path(path + "/_schema.json")
-        stream = fs.create(p, True)
-        stream.write(bytearray(df.schema.json().encode("utf-8")))
-        stream.close()
-
-    def _read_stage(self, path: str) -> DataFrame:
-        """A committed stage read through its ``_schema.json`` sidecar."""
-        fs, p = self._hadoop_path(path + "/_schema.json")
+    def _read_record(self, name: str) -> dict | None:
+        """The commit record of output ``name``: StructType JSON plus the
+        ``fingerprint`` it was built for and its ``rows`` per partition;
+        None when there is none."""
+        fs, p = self._record_file(name)
+        if not fs.exists(p):
+            return None
         stream = fs.open(p)
         try:
             raw = bytes(
@@ -276,8 +202,54 @@ class Pipeline:
             )
         finally:
             stream.close()
-        schema = StructType.fromJson(json.loads(raw))
-        return self.spark.read.schema(schema).parquet(path)
+        return json.loads(raw)
+
+    def _committed(self, name: str, key: str) -> bool:
+        """The directory of ``name`` holds the build for ``key``. A record
+        without a fingerprint (written before records carried one) or
+        without a file at all rebuilds the output, never reads it by
+        inference."""
+        rec = self._read_record(name)
+        return rec is not None and rec.get("fingerprint") == key
+
+    def _read_stage(self, name: str) -> DataFrame:
+        """A committed stage read through its record's schema."""
+        schema = StructType.fromJson(self._read_record(name))
+        return self.spark.read.schema(schema).parquet(self._stage_path(name))
+
+    def _append_lineage(self, rows: list[tuple]) -> None:
+        local_frame(self.spark, rows, LINEAGE_SCHEMA).write.mode(
+            "append").parquet(self._stage_path("lineage"))
+
+    def _commit(self, names: list[str], key: str, write: "callable") -> None:
+        """The one commit path of every output. ``write()`` writes the
+        data of ``names`` and returns ``{name: (schema, {partition:
+        rows})}``. In order: delete each old record, write, append the
+        lineage rows (``ts`` ends the ``wall_ms`` window), then write each
+        record to a temporary name and rename it to ``_schema.json``. A
+        failure at any step leaves no record naming ``key``, so the next
+        run rebuilds the outputs."""
+        t0 = int(time.time() * 1000)
+        self._fresh.update(names)
+        for name in names:
+            fs, p = self._record_file(name)
+            fs.delete(p, False)
+        records = write()
+        ts = int(time.time() * 1000)
+        self._append_lineage([
+            (self.run_id, name, part, n, ts - t0, key, "complete", ts)
+            for name, (_, rows) in records.items() for part, n in rows.items()
+        ])
+        for name, (schema, rows) in records.items():
+            fs, p = self._record_file(name)
+            tmp = p.suffix(".tmp")
+            stream = fs.create(tmp, True)
+            stream.write(bytearray(json.dumps(
+                {**schema.jsonValue(), "fingerprint": key, "rows": rows}
+            ).encode("utf-8")))
+            stream.close()
+            if not fs.rename(tmp, p):
+                raise OSError(f"could not commit the record of {name}")
 
     def _run_stage(
         self,
@@ -287,77 +259,75 @@ class Pipeline:
         partition_col: str | None = None,
         partition_by: str | None = None,
     ) -> DataFrame:
-        """Run-or-resume one stage; returns the stage output DataFrame.
+        """Run-or-resume one stage; returns the stage output DataFrame,
+        read back through its record's schema (no read runs an inference
+        job, and an EMPTY partitioned stage, which has no part file to
+        infer from, still reads back)."""
+        def write() -> dict:
+            path = self._stage_path(stage)
+            df = build()
+            if not partition_col:
+                # the row total rides the stage write itself as an
+                # observe() metric — no post-write count job
+                row_obs = Observation()
+                df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(path)
+            if not partition_col:
+                return {stage: (df.schema, {"*": int(row_obs.get["n"] or 0)})}
+            # per-partition-value counts, which observe cannot group: a
+            # groupBy over the written parquet scans only the partition
+            # column; an empty stage logs one "*" row of 0
+            counts = self.spark.read.schema(df.schema).parquet(path).groupBy(
+                partition_col).count().collect()
+            return {stage: (df.schema, {
+                f"{partition_col}={r[partition_col]}": r["count"]
+                for r in counts} or {"*": 0})}
 
-        A fresh stage writes its parquet, then its ``_schema.json``
-        sidecar (the commit marker ``_committed`` checks), then its
-        lineage rows. Both a fresh and a resumed stage are read back
-        through the sidecar schema, so no read runs an inference job."""
-        path = self._stage_path(stage)
-        if self._committed(stage, fingerprint):
-            return self._read_stage(path)
-        self._fresh.add(stage)
-        t0 = time.time()
-        df = build()
-        row_obs = None
-        if not partition_col:
-            # the row total rides the stage write itself as an observe()
-            # metric — no post-write count job over the snapshot (the
-            # partitioned branch needs per-partition-value counts, which
-            # observe cannot group; its groupBy over the written parquet
-            # scans only the partition column and stays)
-            row_obs = Observation()
-            df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
-        # the sidecar also carries an EMPTY partitioned stage (_SUCCESS
-        # but zero part files), which has no inferable schema — a
-        # degenerate-but-legal corpus (e.g. all captures are redirects →
-        # zero triples) must flow through the DAG
-        self._write_stage_schema(path, df)
-        out = self._read_stage(path)
-        wall = int((time.time() - t0) * 1000)
-        if partition_col:
-            rows = out.groupBy(partition_col).count().collect()
-            for r in rows:
-                self._record(stage, f"{partition_col}={r[partition_col]}",
-                             r["count"], wall, fingerprint)
-            if not rows:
-                # an EMPTY partitioned stage has no per-partition rows;
-                # without this marker it is never 'complete' and every
-                # resume rebuilds it — exactly the degenerate-corpus case
-                # the schema sidecar above exists for (code-review r5
-                # wave-2 #7)
-                self._record(stage, "*", 0, wall, fingerprint)
-        else:
-            self._record(stage, "*", int(row_obs.get["n"] or 0), wall,
-                         fingerprint)
-        self._flush_lineage()
-        return out
+        if not self._committed(stage, fingerprint):
+            self._commit([stage], fingerprint, write)
+        return self._read_stage(stage)
 
     def _export(self, quads: DataFrame, fp: str, rows_stage: str) -> None:
         """K1: the multi-format export fan-out (N-Triples/N-Quads/Turtle/...
-        with suffix-implied codecs) of ``quads``, committed by one lineage
-        row. That row is keyed on the (key, serializer) PAIRS: adding a
-        format OR changing a key's serializer re-runs the fan-out without
+        with suffix-implied codecs) of ``quads``, one commit keyed on
+        ``fp`` plus the (key, serializer) PAIRS: adding a format OR
+        changing a key's serializer re-runs the fan-out without
         rebuilding the DAG (keys-only keying kept a stale export on a
         value change — code-review r5 wave-2 #9). The exported row count
-        is ``rows_stage``'s lineage total: correct on resumed runs too,
+        is ``rows_stage``'s record total: correct on resumed runs too,
         with no data re-scan."""
         formats = self.cfg.output_formats
         if not formats:
             return
         fmt_key = ",".join(f"{k}={v}" for k, v in sorted(formats.items()))
-        if self._lineage_complete("exports", fp, partition=fmt_key):
-            return
-        t0 = time.time()
-        M.write_formats(quads, self._stage_path("exports"), formats)
-        n_out = self._stage_row_total(rows_stage, fp)
-        self._record("exports", fmt_key, n_out,
-                     int((time.time() - t0) * 1000), fp)
-        self._flush_lineage()
+        key = f"{fp}/{fmt_key}"
+
+        def write() -> dict:
+            # the whole fan-out is replaced: a format the config dropped
+            # must not stay next to a record that no longer names it
+            fs, record = self._record_file("exports")
+            fs.delete(record.getParent(), True)
+            M.write_formats(quads, self._stage_path("exports"), formats)
+            n = sum(self._read_record(rows_stage)["rows"].values())
+            return {"exports": (TEXT_SCHEMA, {fmt_key: n})}
+
+        if not self._committed("exports", key):
+            self._commit(["exports"], key, write)
+
+    def _write_metrics(self, rows: list[tuple[str, int]]) -> None:
+        """Append this run's (metric, value) counters to ``metrics``. A
+        run that built nothing appends one ``resumed`` row instead, so
+        every run leaves a trace there."""
+        if not self._fresh:
+            rows = [("resumed", 1)]
+        if rows:
+            ts = int(time.time() * 1000)
+            local_frame(self.spark, [(self.run_id, m, v, ts) for m, v in rows],
+                        METRICS_SCHEMA).write.mode("append").parquet(
+                self._stage_path("metrics"))
 
     # -- the DAG ------------------------------------------------------------
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
@@ -366,8 +336,11 @@ class Pipeline:
         Every stage is resumable; metrics land in ``{warehouse}/metrics``.
         """
         fp = f"{self._fingerprint(pages)}-{self._config_sig()}"
-        obs = Observation("extract_metrics")
-        pages_obs = Observation("pages_metrics")
+        # unnamed: Spark keys an observation by (name, observed frame), so
+        # a fixed name on the caller's ``pages`` would leave a re-run after
+        # a failed one waiting forever on the failed run's registration
+        obs = Observation()
+        pages_obs = Observation()
 
         # disambiguation side-set: a cached stage (the reference's
         # disambiguations-ids.obj), broadcast into the extraction pass
@@ -488,36 +461,31 @@ class Pipeline:
 
         self._export(final, fp, final_stage)
 
-        t0 = time.time()
-        if not all(self._committed(name, fp) for name, _, _ in M.GRAPH_TABLES):
+        # the four graph tables are one commit, rebuilt unless every one
+        # has a record for this build (each builder gives its schema
+        # without executing anything)
+        graph = [name for name, _, _ in M.GRAPH_TABLES]
+
+        def write_graph() -> dict:
             counts = M.write_graph_tables(final, self.cfg.warehouse)
-            # the four tables are one commit, rebuilt unless every one has
-            # its sidecar (each builder gives its schema without executing
-            # anything)
-            for name, builder, _ in M.GRAPH_TABLES:
-                self._write_stage_schema(self._stage_path(name),
-                                         builder(final))
-            wall = int((time.time() - t0) * 1000)
-            for name, n in counts.items():
-                self._record(name, "*", n, wall, fp)
-            self._flush_lineage()
-        for name, _, _ in M.GRAPH_TABLES:
-            outputs[name] = self._read_stage(self._stage_path(name))
+            return {name: (builder(final).schema, {"*": counts[name]})
+                    for name, builder, _ in M.GRAPH_TABLES}
+
+        if not all(self._committed(name, fp) for name in graph):
+            self._commit(graph, fp, write_graph)
+        for name in graph:
+            outputs[name] = self._read_stage(name)
 
         # metrics table (the reference's accumulator report, C3): counters
         # come from the extraction stage's observe() — captured BY the stage
         # write, so NO extra action re-scans the input (VERDICT r3 #5). On a
         # resumed run the quads stage never executed, so the observation is
         # empty — the metrics rows from the original run are already in the
-        # table and nothing is appended.
-        if "quads" in self._fresh:
-            ts = int(time.time() * 1000)
-            metrics = [
-                (self.run_id, "pages_in", int(pages_obs.get["pages_in"]), ts),
-                (self.run_id, "quads_out", int(obs.get["quads_out"]), ts),
-            ]
-            local_frame(self.spark, metrics, METRICS_SCHEMA).write.mode(
-                "append").parquet(self._stage_path("metrics"))
+        # table.
+        self._write_metrics([
+            ("pages_in", int(pages_obs.get["pages_in"])),
+            ("quads_out", int(obs.get["quads_out"])),
+        ] if "quads" in self._fresh else [])
         return outputs
 
 

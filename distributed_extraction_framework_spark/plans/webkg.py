@@ -5,9 +5,12 @@ The crawl-side counterpart of plans/pipeline.py's wiki DAG (reference:
 the extraction launcher's job graph, DistExtractionJob semantics —
 reference: extraction/src/main/scala/org/dbpedia/extraction/dump/extract/
 ExtractionJob.scala), sharing Pipeline's entire stage protocol verbatim
-(input⊕config fingerprint, parquet stage snapshots, schema-sidecar-as-
-marker, per-(run,stage,partition) lineage rows, resume-by-fingerprint,
-one export commit). Only the DAG body and the config signature differ:
+(input⊕config fingerprint, parquet stage snapshots, one commit path
+whose ``_schema.json`` record names each output's fingerprint and rows,
+an append-only per-(run,output,partition) lineage log, resume-by-
+fingerprint). Only the DAG body and the config signature differ. The
+optional ``cdx`` index commits through the same path, as a text output.
+The stages:
 
 1. ``web_pages`` (optional) — recrawl collapse: keep the newest capture
    per canonical URL (scrub.latest_capture argmax + a keeper semi-join;
@@ -35,7 +38,6 @@ touches only the (tiny) redirect pair set.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +47,7 @@ from ..operators.redirects import transitive_closure
 from ..operators.scrub import latest_capture
 from ..operators.structured_data import web_page_triples
 from ..sources.warc import web_redirects
-from .pipeline import Pipeline, config_digest
+from .pipeline import TEXT_SCHEMA, Pipeline, config_digest
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
@@ -132,26 +134,26 @@ class WebKGPipeline(Pipeline):
         if "page_id" not in cur.columns:
             cur = cur.withColumn("page_id", F.xxhash64(cfg.url_col))
 
-        if cfg.cdx and not self._lineage_complete("cdx", fp):
-            from ..operators.webarchive import cdx_index, write_cdx
+        if cfg.cdx and not self._committed("cdx", fp):
+            def write_cdx_index() -> dict:
+                from ..operators.webarchive import cdx_index, write_cdx
 
-            t0 = time.time()
-            recs = cdx_index(
-                pages, url_col=cfg.url_col,
-                status_col="http_status"
-                if "http_status" in pages.columns else None,
-            )
-            path = self._stage_path("cdx")
-            write_cdx(recs, path, num_files=cfg.cdx_files)
-            # line-count the written text (one cheap output scan) rather
-            # than re-scanning + re-projecting the input. NB an observe()
-            # on the write was tried and REVERTED: repartitionByRange's
-            # boundary-sampling job executes the observed node a second
-            # time, so the metric double-counts (16 for 8 rows).
-            n_cdx = self.spark.read.text(path).count()
-            self._record("cdx", "all", n_cdx,
-                         int((time.time() - t0) * 1000), fp)
-            self._flush_lineage()
+                recs = cdx_index(
+                    pages, url_col=cfg.url_col,
+                    status_col="http_status"
+                    if "http_status" in pages.columns else None,
+                )
+                path = self._stage_path("cdx")
+                write_cdx(recs, path, num_files=cfg.cdx_files)
+                # line-count the written text (one cheap output scan) rather
+                # than re-scanning + re-projecting the input. NB an observe()
+                # on the write was tried and REVERTED: repartitionByRange's
+                # boundary-sampling job executes the observed node a second
+                # time, so the metric double-counts (16 for 8 rows).
+                return {"cdx": (TEXT_SCHEMA,
+                                {"all": self.spark.read.text(path).count()})}
+
+            self._commit(["cdx"], fp, write_cdx_index)
 
         if cfg.latest_only:
             def build_latest() -> DataFrame:
@@ -255,6 +257,7 @@ class WebKGPipeline(Pipeline):
 
         self._export(triples_to_quads(final, cfg.skolem_base), fp,
                      final_stage)
+        self._write_metrics([])
         return out
 
 

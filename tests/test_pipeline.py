@@ -1,4 +1,5 @@
-"""End-to-end pipeline: materialization, N-Triples sink, lineage, resume."""
+"""End-to-end pipeline: materialization, N-Triples sink, lineage, commit
+records, resume."""
 
 import glob
 import os
@@ -269,7 +270,7 @@ def test_pipeline_metrics_come_from_observation(spark, pages_df, tmp_path, monke
 def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path):
     """K1+C1 wired into the resumable DAG (VERDICT r3 #10): quad stages lay
     out as (page_lang, dataset); the export fan-out writes per-format
-    compressed text as a lineage-guarded stage that resume skips."""
+    compressed text as a committed output that resume skips."""
     import os
 
     wh = str(tmp_path / "wh_fanout")
@@ -320,6 +321,15 @@ def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path):
     assert os.path.isdir(f"{wh}/exports/ttl_gz")
     lineage3 = spark.read.parquet(wh + "/lineage")
     assert lineage3.filter(F.col("stage") == "exports").count() == 2
+
+    # DROPPING formats leaves only the recorded one on disk
+    run_pipeline(
+        spark, pages_df, wh,
+        link_entities=False, canonicalize=False,
+        partition_by_lang=True, output_formats={"nt.gz": "n-triples"},
+    )
+    assert [d for d in os.listdir(f"{wh}/exports")
+            if not d.startswith(("_", "."))] == ["nt_gz"]
 
 
 def test_sink_marker_lines(spark, pages_df, tmp_path):
@@ -485,6 +495,41 @@ def test_pipeline_config_change_rebuilds_stages(spark, pages_df, tmp_path):
         "config change must invalidate the quads snapshot")
 
 
+def test_resume_never_serves_another_configs_build(spark, tmp_path):
+    """Config A, then B, then A again on one warehouse: the third run
+    rebuilds every output the second overwrote and equals A on a fresh
+    warehouse. (Completion used to ask whether ANY lineage row ever
+    completed the stage for A's fingerprint, so the third run served B's
+    quads.)"""
+    from distributed_extraction_framework_spark.plans import materialize as M
+    from distributed_extraction_framework_spark.plans.pipeline import (
+        Pipeline, PipelineConfig,
+    )
+    from distributed_extraction_framework_spark.sources.synth import synth_pages
+
+    pages = synth_pages(spark, 60, partitions=2)
+    graph = [name for name, _, _ in M.GRAPH_TABLES]
+
+    def run(wh, extractors):
+        p = Pipeline(spark, PipelineConfig(
+            warehouse=str(tmp_path / wh), extractors=extractors,
+            link_entities=False, output_formats={"nt": "n-triples"}))
+        out = p.run(pages)
+        exported = spark.read.text(str(tmp_path / wh / "exports" / "nt"))
+        digests = {n: _digest(out[n]) for n in ["quads"] + graph}
+        digests["exports"] = _digest(exported)
+        return p, digests
+
+    a, b = ["labels"], ["labels", "page_links"]
+    _, fresh_a = run("fresh", a)
+    run("wh", a)
+    _, got_b = run("wh", b)
+    assert got_b["quads"][0] > fresh_a["quads"][0]
+    p, got = run("wh", a)
+    assert {"quads", "exports", *graph} <= p._fresh
+    assert got == fresh_a
+
+
 def test_pipeline_in_memory_inputs_get_distinct_fingerprints(
         spark, tmp_path):
     """createDataFrame inputs have no files; the plan hash must still
@@ -508,7 +553,7 @@ def test_pipeline_in_memory_inputs_get_distinct_fingerprints(
 
 
 def test_pipeline_empty_partitioned_stage_resumes(spark, tmp_path):
-    """A zero-row partitioned stage records a lineage marker so resume
+    """A zero-row partitioned stage still commits its record, so resume
     skips the rebuild (code-review r5 wave-2 #7)."""
     from distributed_extraction_framework_spark.plans.pipeline import (
         Pipeline, PipelineConfig,
@@ -639,10 +684,11 @@ def _digest(df):
 
 def test_resume_runs_no_inference_jobs_and_keeps_committed_schema(
         spark, tmp_path):
-    """Every stage reads back through its ``_schema.json`` sidecar. A
+    """Every stage reads back through its ``_schema.json`` record. A
     resume over a parquet-backed input (no content-hash job) runs ONE
-    Spark job, the lineage collect; a partition column whose values look
-    numeric keeps its written ``string`` type."""
+    Spark job, the append of its ``resumed`` metrics row: completion is
+    read from the records, not the lineage table; a partition column
+    whose values look numeric keeps its written ``string`` type."""
     import json
 
     from pyspark.sql.types import StructType
@@ -667,6 +713,9 @@ def test_resume_runs_no_inference_jobs_and_keeps_committed_schema(
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not p2._fresh
     assert len(sc.statusTracker().getJobIdsForGroup("resume_probe")) == 1
+    assert [(r["metric"], r["value"]) for r in spark.read.parquet(
+        str(tmp_path / "wh" / "metrics")).filter(
+        F.col("run_id") == p2.run_id).collect()] == [("resumed", 1)]
 
     p = Pipeline(spark, PipelineConfig(warehouse=str(tmp_path / "whk")))
     df = spark.createDataFrame([(f"v{i}", str(i % 5)) for i in range(10)],
@@ -682,10 +731,12 @@ def test_resume_runs_no_inference_jobs_and_keeps_committed_schema(
 
 
 def test_stage_without_sidecar_is_rebuilt(spark, tmp_path):
-    """The sidecar is the commit marker: a stage directory whose
-    ``_schema.json`` is gone is rebuilt, never read by inference, and the
-    rebuild equals the first build. A later export counts the rebuilt
-    stage's rows once, although its lineage holds them twice."""
+    """The sidecar is the commit record: a stage directory whose
+    ``_schema.json`` is gone, or holds only a schema (as written before
+    records carried a fingerprint), is rebuilt, never read by inference,
+    and the rebuild equals the first build. A later export's record
+    counts the rebuilt stage's rows once."""
+    import json
     from dataclasses import replace
 
     from distributed_extraction_framework_spark.plans.pipeline import (
@@ -702,25 +753,32 @@ def test_stage_without_sidecar_is_rebuilt(spark, tmp_path):
     quads = _digest(spark.read.parquet(wh + "/quads"))
     assert final[0] > 0
     os.remove(wh + "/quads/_schema.json")
-    os.remove(wh + "/quads_resolved/_schema.json")
+    record = wh + "/quads_resolved/_schema.json"
+    with open(record) as f:
+        schema_only = {k: v for k, v in json.load(f).items()
+                       if k not in ("fingerprint", "rows")}
+    os.remove(record)
+    os.remove(wh + "/quads_resolved/._schema.json.crc")
+    with open(record, "w") as f:
+        json.dump(schema_only, f)
     p2 = Pipeline(spark, cfg)
     out = p2.run(pages)
     assert {"quads", "quads_resolved"} <= p2._fresh
     assert _digest(out["quads"]) == final
     assert _digest(spark.read.parquet(wh + "/quads")) == quads
 
-    Pipeline(spark, replace(cfg, output_formats={"nt": "n-triples"})).run(pages)
-    exported = [r["n_rows"] for r in spark.read.parquet(wh + "/lineage")
-                .filter(F.col("stage") == "exports").collect()]
-    assert exported == [final[0]]
+    p3 = Pipeline(spark, replace(cfg, output_formats={"nt": "n-triples"}))
+    p3.run(pages)
+    assert p3._fresh == {"exports"}
+    assert p3._read_record("exports")["rows"] == {"nt=n-triples": final[0]}
 
 
 def test_graph_table_without_sidecar_is_rebuilt(spark, tmp_path):
     """The four graph tables are one commit: a resume where any one of
     them lost its ``_schema.json`` rebuilds all four (it used to check
     only ``edges`` and then fail reading the others back). The rebuild
-    equals the first build, and each table's lineage total counts its
-    rows once although the lineage now holds them twice."""
+    equals the first build, and each table's record names the build and
+    counts its rows."""
     from distributed_extraction_framework_spark.plans import materialize as M
     from distributed_extraction_framework_spark.plans.pipeline import (
         Pipeline, PipelineConfig,
@@ -735,13 +793,15 @@ def test_graph_table_without_sidecar_is_rebuilt(spark, tmp_path):
     p1 = Pipeline(spark, cfg)
     first = {n: _digest(df) for n, df in p1.run(pages).items() if n in names}
     fp = f"{p1._fingerprint(pages)}-{p1._config_sig()}"
-    totals = {n: p1._stage_row_total(n, fp) for n in names}
-    assert totals["predicates"] > 0
-    assert totals == {n: first[n][0] for n in names}
+    records = {n: p1._read_record(n) for n in names}
+    assert {n: r["fingerprint"] for n, r in records.items()} == dict.fromkeys(
+        names, fp)
+    assert {n: r["rows"] for n, r in records.items()} == {
+        n: {"*": first[n][0]} for n in names}
+    assert first["predicates"][0] > 0
     os.remove(wh + "/predicates/_schema.json")
     p2 = Pipeline(spark, cfg)
     out = p2.run(pages)
+    assert set(names) <= p2._fresh
     assert {n: _digest(out[n]) for n in names} == first
-    assert os.path.exists(wh + "/predicates/_schema.json")
-    assert sum(1 for r in p2._lineage_records() if r[0] == "predicates") == 2
-    assert {n: p2._stage_row_total(n, fp) for n in names} == totals
+    assert {n: p2._read_record(n) for n in names} == records
