@@ -6,8 +6,9 @@ byte gate, one round loop.
   convergence count, a size probe) come from ONE Spark job. On a
   multi-executor cluster ``localCheckpoint`` blocks die with their
   executor; this is the one place to swap in ``checkpoint()``.
-* The byte gate reads the :func:`size` metrics of a pin and has three
-  outcomes. :func:`local` hands a pin that fits :data:`BROADCAST_BYTES`
+* The byte gate reads the :func:`size` metrics of a pin (the one
+  :func:`estimate` of its broadcast bytes) and has three outcomes.
+  :func:`local` hands a pin that fits :data:`BROADCAST_BYTES`
   to the driver as one Arrow table, for a caller that can solve its
   whole fixpoint there (a broadcast collects the same table to the
   driver anyway); the result goes back as a ``session.local_frame``, so
@@ -15,7 +16,8 @@ byte gate, one round loop.
   ``bc`` join hint: checkpointed frames carry no statistics, so without
   it the planner sort-merges a vertex-sized table against the graph
   every round. Past the budget the shuffled join stays, which is the
-  unbounded-scale shape.
+  unbounded-scale shape. ``linking.link_entities`` reads the same gate
+  off its dictionary's pin to pick a tier and, past it, a shard count.
 * :func:`fixpoint` runs one pinned job per round until a stop rule holds.
 """
 
@@ -46,9 +48,14 @@ def size(*keys: str) -> dict[str, Column]:
     return {"rows": F.count(F.lit(1)), "width": F.avg(width)}
 
 
+def estimate(m: dict) -> float:
+    """Broadcast bytes of a table pinned with :func:`size`: rows × (avg
+    key bytes + row overhead)."""
+    return m["rows"] * ((m["width"] or 0.0) + ROW_OVERHEAD_BYTES)
+
+
 def _fits(m: dict) -> bool:
-    """rows × (avg key bytes + row overhead) fits :data:`BROADCAST_BYTES`."""
-    return m["rows"] * ((m["width"] or 0.0) + ROW_OVERHEAD_BYTES) <= BROADCAST_BYTES
+    return estimate(m) <= BROADCAST_BYTES
 
 
 def gate(m: dict) -> Callable[[DataFrame], DataFrame]:

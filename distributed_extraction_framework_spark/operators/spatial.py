@@ -66,17 +66,6 @@ def haversine_km(
     return 2.0 * EARTH_RADIUS_KM * F.asin(F.sqrt(a))
 
 
-def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
-    """The identical formula as portable SQL (for oracles / other engines)."""
-    return (
-        f"2.0 * {EARTH_RADIUS_KM} * asin(sqrt("
-        f"sin(radians({lat2} - {lat1}) / 2.0) * sin(radians({lat2} - {lat1}) / 2.0)"
-        f" + cos(radians({lat1})) * cos(radians({lat2}))"
-        f" * sin(radians({lon2} - {lon1}) / 2.0)"
-        f" * sin(radians({lon2} - {lon1}) / 2.0)))"
-    )
-
-
 def _cell_cols(lat: Column, lon: Column, cell_deg: float, ring: int):
     """(cell_lat, cell_lon) integer grid indices; lon normalized to
     [0, 360) first so the antimeridian is an ordinary cell boundary the

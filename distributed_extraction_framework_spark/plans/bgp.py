@@ -271,20 +271,6 @@ def _extract_filters(body: str) -> tuple[str, list[str]]:
     return " ".join(out), filters
 
 
-def _extract_blocks(body: str, opener: re.Pattern) -> tuple[str, list]:
-    """Strip ``opener … { balanced }`` blocks; return (rest, [(match, inner)])."""
-    blocks, out, i = [], [], 0
-    for m in opener.finditer(body):
-        if m.start() < i:
-            continue  # inside a previously-consumed block
-        out.append(body[i: m.start()])
-        end = _balanced(body, m.end() - 1)
-        blocks.append((m, body[m.end(): end - 1]))
-        i = end
-    out.append(body[i:])
-    return " ".join(out), blocks
-
-
 _OPTIONAL_OPEN = re.compile(r"\bOPTIONAL\s*(\{)", re.IGNORECASE)
 _GRAPH_OPEN = re.compile(
     r"\bGRAPH\s+(?P<g>\?\w+|<[^<>\s]+>)\s*(\{)", re.IGNORECASE

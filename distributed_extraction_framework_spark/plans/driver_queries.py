@@ -28,7 +28,8 @@ from ..functions import text as T
 from ..operators import dedup as D
 from ..operators import similarity as SIM
 from ..operators.extractors import extractor_df
-from ..operators.linking import link_entities, surface_forms_from_labels
+from ..operators.linking import (detect_mentions_distributed, link_entities,
+                                 score_candidates, surface_forms_from_labels)
 from ..operators.redirects import harvest_redirects, transitive_closure
 from ..streaming import events as STR
 
@@ -544,17 +545,18 @@ def q_entity_links(spark, sf_dir):
 
 
 def q_entity_links_unbounded(spark, sf_dir):
-    """Same links, UNBOUNDED-dictionary plan (VERDICT r4 #1): broadcast_rows=1
-    forces n_shards = n_surfaces > max_broadcast_shards, routing mention
-    detection through detect_mentions_distributed — one corpus pass, salted
+    """Same links, UNBOUNDED-dictionary plan (VERDICT r4 #1): the tier
+    ``link_entities`` takes past ``MAX_BROADCAST_SHARDS`` shards, run
+    directly — detect_mentions_distributed (one corpus pass, salted
     gram-block equi-join against the distributed dictionary index,
-    window-local verify. Hash-compared to the SAME oracle as entity_links."""
+    window-local verify), then the salted score_candidates join.
+    Hash-compared to the SAME oracle as entity_links."""
     pages = _pages(spark, sf_dir)
     quads = extractor_df(pages, "labels")
     sf = surface_forms_from_labels(quads)
-    return link_entities(pages, sf, broadcast_rows=1).select(
-        "subj", "surface", "obj", "n_mentions"
-    )
+    best = score_candidates(detect_mentions_distributed(pages, sf), sf)
+    return best.select(F.col("page").alias("subj"), "surface",
+                       F.col("entity").alias("obj"), "n_mentions")
 
 
 def q_stateful_running_counts(spark, sf_dir):

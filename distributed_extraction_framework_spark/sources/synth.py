@@ -298,14 +298,6 @@ def synth_crawl_pages(
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
-def write_crawl_pages(
-    spark: SparkSession, n: int, path: str, partitions: int | None = None
-) -> None:
-    """Materialize the crawl-style table to parquet (Iceberg on a real
-    cluster — same writer with ``.format("iceberg")``)."""
-    synth_crawl_pages(spark, n, partitions).write.mode("overwrite").parquet(path)
-
-
 # --------------------------------------------------------------------------
 # skew-adversarial ("zipfian") fixtures — VERDICT r4 #4 / north_rule "skew
 # handled explicitly". The benign corpus above never stresses the skew

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from distributed_extraction_framework_spark.operators import linking
+from distributed_extraction_framework_spark.operators import fixpoint, linking
 from distributed_extraction_framework_spark.operators.extractors import extract
 from distributed_extraction_framework_spark.operators.linking import (
     AhoCorasick,
@@ -106,9 +106,12 @@ def test_broadcast_scoring_plan_has_no_shuffle_join(spark, pages_df):
 
 def test_large_dict_path_is_sharded_and_bounded(spark, pages_df, monkeypatch):
     """VERDICT r3 #1: the large-dictionary path must never materialize the
-    full surface set on the driver — the smallness probe is a count (no row
-    transfer) and each automaton shard collect is bounded by ~broadcast_rows,
-    while results stay identical to the small (single-broadcast) path."""
+    full surface set on the driver — the tier is read off the dictionary's
+    sizing pin (no row transfer) and each automaton shard collect is a
+    hash shard of the surfaces, while results stay identical to the small
+    (single-broadcast) path."""
+    import math
+
     quads = extract(pages_df, extractors=["labels"]).cache()
     sf = surface_forms_from_labels(quads).cache()
     # patch the CONCRETE class (Spark 4: pyspark.sql.classic.DataFrame
@@ -119,7 +122,7 @@ def test_large_dict_path_is_sharded_and_bounded(spark, pages_df, monkeypatch):
 
     expected = {
         (r["subj"], r["surface"], r["obj"])
-        for r in link_entities(pages_df, sf, broadcast_rows=10**6).collect()
+        for r in link_entities(pages_df, sf).collect()
     }
 
     collected_sizes: list[int] = []
@@ -130,22 +133,58 @@ def test_large_dict_path_is_sharded_and_bounded(spark, pages_df, monkeypatch):
         collected_sizes.append(len(rows))
         return rows
 
+    # a budget of a quarter of the dictionary's byte estimate, as
+    # link_entities sizes it: ceil(estimate / cap) = 4 shards (>= 3)
+    n_shards = 4
+    _, m = fixpoint.pin(sf, **fixpoint.size("surface", "entity"))
+    cap = math.ceil(fixpoint.estimate(m) / n_shards)
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
-    cap = 4  # forces ceil(n_surfaces / 4) >= 3 shards
+    monkeypatch.setattr(fixpoint, "BROADCAST_BYTES", cap)
     # MAX_BROADCAST_SHARDS pinned high: this test exercises the SHARDED
     # tier; above the shard cap link_entities switches to the single-scan
     # distributed tier (tested separately below)
     monkeypatch.setattr(linking, "MAX_BROADCAST_SHARDS", 1000)
-    linked = link_entities(pages_df, sf, broadcast_rows=cap)
+    linked = link_entities(pages_df, sf)
     monkeypatch.undo()  # internal collects all happen at build time
     got = {(r["subj"], r["surface"], r["obj"]) for r in linked.collect()}
     assert got == expected
     # every driver collect inside the large path is a shard, strictly
-    # smaller than the full dictionary (hash shards are ~cap-sized; allow
-    # skew up to 3x the target shard size but never the whole set)
+    # smaller than the full dictionary (hash shards hold about
+    # n_surfaces / n_shards; allow skew up to 3x the target shard size
+    # but never the whole set)
     assert collected_sizes, "large path must have collected shard lists"
+    assert len(collected_sizes) == n_shards
     assert max(collected_sizes) < n_surfaces
-    assert max(collected_sizes) <= 3 * cap
+    assert max(collected_sizes) <= 3 * math.ceil(n_surfaces / n_shards)
+
+
+def test_small_tier_runs_two_jobs(spark, pages_df):
+    """Under the default gate the dictionary is sized by the pin that
+    materializes it and collected by one ``toArrow``: two Spark jobs
+    before ``link_entities`` returns, no probe or count job beside them."""
+    quads = extract(pages_df, extractors=["labels"]).cache()
+    sf = surface_forms_from_labels(quads).cache()
+    sf.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("link_small", "link_small")
+    try:
+        link_entities(pages_df, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("link_small")) == 2
+
+
+def test_empty_dictionary_links_nothing_on_every_tier(spark, pages_df,
+                                                      both_tiers):
+    """An empty dictionary fits any open gate and takes the distributed
+    tier under a closed one; both give an empty frame of the output
+    schema."""
+    empty = spark.createDataFrame(
+        [], "surface string, entity string, prior double")
+    for linked in both_tiers(lambda: link_entities(pages_df, empty)):
+        assert linked.columns == ["dataset", "subj", "pred", "obj",
+                                  "surface", "n_mentions", "score"]
+        assert linked.count() == 0
 
 
 def test_make_matcher_drops_empty_patterns_uniformly(monkeypatch):
@@ -283,11 +322,11 @@ def test_unbounded_dict_routes_to_single_scan_tier(spark, pages_df, tmp_path):
     quads = extract(pages_df, extractors=["labels"]).cache()
     sf = surface_forms_from_labels(quads).cache()
     n_surfaces = sf.select("surface").distinct().count()
-    assert n_surfaces > 8  # broadcast_rows=1 → n_shards = n_surfaces > cap
+    assert n_surfaces > 8  # more surfaces than the default shard cap
 
     expected = {
         (r["subj"], r["surface"], r["obj"], r["n_mentions"])
-        for r in link_entities(pages_df, sf, broadcast_rows=10**6).collect()
+        for r in link_entities(pages_df, sf).collect()
     }
 
     DataFrame = type(sf)
@@ -302,8 +341,10 @@ def test_unbounded_dict_routes_to_single_scan_tier(spark, pages_df, tmp_path):
     import pytest as _pytest
     mp = _pytest.MonkeyPatch()
     mp.setattr(DataFrame, "collect", spy_collect)
+    # a one-byte budget: n_shards = the estimate in bytes > the shard cap
+    mp.setattr(fixpoint, "BROADCAST_BYTES", 1)
     try:
-        linked = link_entities(pages_df, sf, broadcast_rows=1)
+        linked = link_entities(pages_df, sf)
     finally:
         mp.undo()
     got = {
