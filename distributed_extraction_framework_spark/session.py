@@ -178,8 +178,8 @@ def _class_data_sharing(conf: dict[str, str]) -> dict | None:
     env = os.environ
     java_opts = " ".join([conf.get("spark.driver.defaultJavaOptions", ""),
                           conf.get("spark.driver.extraJavaOptions", ""),
-                          env.get("JAVA_TOOL_OPTIONS", ""), env.get("_JAVA_OPTIONS", ""),
-                          env.get("SPARK_SUBMIT_OPTS", "")])
+                          *(env.get(v, "") for v in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS",
+                                                     "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS"))])
     heap = _heap_bytes(conf.get("spark.driver.memory", "1g"))
     if (env.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell"
             or any(env.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
@@ -189,11 +189,9 @@ def _class_data_sharing(conf: dict[str, str]) -> dict | None:
         return None
     home = _find_spark_home()
     conf_dir = env.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
-    try:
-        if any(not f.endswith(".template") for f in os.listdir(conf_dir)):
-            return None
-    except FileNotFoundError:
-        pass
+    if os.path.isdir(conf_dir) and any(not f.endswith(".template")
+                                       for f in os.listdir(conf_dir)):
+        return None
     java = os.path.join(env["JAVA_HOME"], "bin", "java") if env.get("JAVA_HOME") \
         else shutil.which("java")
     cache = os.path.join(env.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
