@@ -4,10 +4,16 @@ The reference stops at emitting triples; a KG engine needs at least the
 standard link-analysis pass over the page_links graph. Implemented as
 iterative DataFrame joins (no GraphX/GraphFrames dependency):
 
-* ``pagerank`` — power iteration with damping + dangling-mass
-  redistribution; ranks and out-degrees co-partitioned on ``src`` so each
-  iteration is one shuffle (join reuses the aggregation's partitioning);
-* ``degrees`` — one union + groupBy (map-side partial agg).
+* ``bfs_distances``, ``weighted_sssp`` and the colouring step of
+  ``strongly_connected_components`` are one min-plus relaxation,
+  ``operators.fixpoint.relax`` (as is ``canonicalize.connected_components``),
+  with a driver tier under the byte gate;
+* ``pagerank``, ``hits`` and ``kcore`` are sum/count programs and
+  ``label_propagation`` a mode reduce, each with its own round;
+  ``reachability`` and ``k_truss`` iterate edge sets, not vertex values;
+* ``degrees`` — one union + groupBy (map-side partial agg);
+  ``triangles``, ``edge_support`` and ``cocitation_pmi`` are one pass
+  each, ``random_walks`` one join per step.
 
 Every convergence loop runs on ``operators.fixpoint``: one pinned job
 per round (the lineage cut and its observed convergence metric) and one
@@ -26,8 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
-from .fixpoint import fixpoint, gate, pin, size
+from .fixpoint import fixpoint, gate, pin, relax, size
 
 
 def _unchanged(n, prev) -> bool:
@@ -366,57 +371,26 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
 
 def bfs_distances(
     edges: DataFrame,
-    sources: DataFrame | list[str],
+    sources: list[str],
     max_iter: int = 10,
 ) -> DataFrame:
     """Unweighted shortest-path distance from a source set → ``(uri,
-    dist)`` rows for every vertex within ``max_iter`` hops (sources at 0).
+    dist)`` rows for every vertex within ``max_iter`` hops (sources at 0,
+    a source absent from the edges included).
 
-    Level-synchronous frontier BFS: each round joins the CURRENT frontier
-    (only the just-discovered vertices, not the whole visited set) against
-    the out-edges, anti-joins the visited set, and pins. One equi-join +
-    one anti-join per level, frontier-sized — not visited-sized —
-    shuffle; the round stops on an empty frontier. Directed semantics;
-    pass a symmetrized edge set for undirected distance.
+    Level-synchronous BFS as :func:`fixpoint.relax` with ``w`` = 1: round
+    k reaches the level-k vertices, only they send in round k + 1, and a
+    round that reaches nothing stops; past ``max_iter`` rounds the answer
+    is truncated at that depth. Directed semantics; pass a symmetrized
+    edge set for undirected distance.
     """
-    spark = edges.sparkSession
-    if isinstance(sources, list):
-        sources = local_frame(spark, [(s,) for s in sources], "uri string")
-    # materialize the cleaned edge set ONCE: every level joins against it,
-    # and without the pin each round re-runs the upstream plan (regex
-    # extraction when the edges come straight from extract()). Its size
-    # bounds the vertex-sized frontier and visited tables (≤ 2·|E| keys),
-    # so it also feeds the gate: under it they broadcast and the edge
-    # table is never re-shuffled
     e, m = pin(
-        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
+        edges.select("src", "dst", F.lit(1).alias("w"))
+        .filter(F.col("src") != F.col("dst")).distinct(),
         **size("src", "dst"),
     )
-    bc = gate(m)
-    frontier, _ = pin(
-        sources.select(F.col(sources.columns[0]).alias("uri"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    # visited = the lazy union of the per-level frontiers, each already
-    # materialized by its own round's pin — re-pinning the whole visited
-    # set every level (O(V·depth) rewrite) buys nothing
-    levels: list[DataFrame] = []
-
-    def step(frontier: DataFrame, _) -> DataFrame:
-        levels.append(frontier)
-        visited = reduce(DataFrame.unionByName,
-                         [lv.select("uri") for lv in levels])
-        return (
-            e.join(bc(frontier), frontier["uri"] == e["src"])
-            .select(F.col("dst").alias("uri"))
-            .distinct()
-            .join(bc(visited), "uri", "left_anti")
-            .withColumn("dist", F.lit(len(levels)))
-        )
-
-    last, _ = fixpoint(frontier, step, F.count(F.lit(1)), _empty, max_iter)
-    return reduce(DataFrame.unionByName, levels + [last])
+    return relax(e, m, max_iter, sources=sources).select(
+        F.col("vertex").alias("uri"), F.col("value").alias("dist"))
 
 
 def cocitation_pmi(
@@ -513,6 +487,8 @@ def hits(edges: DataFrame, iterations: int = 5) -> DataFrame:
     scale-determined and the unrolled-SQL oracle reproduces it
     bit-for-bit (modulo FP summation order — gated at 6 dp).
     """
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1: {iterations}")
     e, verts, m = _dedup_edges_and_vertices(edges)
     n = m["rows"]
     if n == 0:
@@ -543,8 +519,7 @@ def hits(edges: DataFrame, iterations: int = 5) -> DataFrame:
     # the final join). The old eager interval-2 form paid one job per
     # checkpointed half-step AND recomputed the un-checkpointed partner
     # chain inside each (hub's checkpoint re-ran auth's two shuffles).
-    auth = None
-    for it in range(iterations):
+    for _ in range(iterations):
         auth = half_step(hub, "src", "dst").localCheckpoint(eager=False)
         hub = half_step(auth, "dst", "src").localCheckpoint(eager=False)
     zh = F.broadcast(hub.agg(F.sum("s").alias("zh")))
@@ -805,7 +780,9 @@ def strongly_connected_components(
     coloring, backward sweep, peel) run on ``fixpoint``: one pinned job
     per round whose observed count is the convergence test, and the
     node-sized tables broadcast under the shared byte gate (above it
-    every join stays in the shuffled unbounded-scale form).
+    every join stays in the shuffled unbounded-scale form). Coloring is
+    :func:`fixpoint.relax`, so a core whose edges fit the gate colours
+    on the driver instead.
     Raises after ``max_rounds``/``max_prop`` non-convergence rather than
     returning wrong components.
     """
@@ -838,19 +815,6 @@ def strongly_connected_components(
             .join(bc(has_in), "node", "left_semi")
         )
 
-    def color(labels: DataFrame, _) -> DataFrame:
-        labels = labels.select("node", "lbl")
-        upd = (
-            rem_e.join(bc(labels.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("cand"))
-        )
-        return labels.join(bc(upd), "node", "left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("cand", F.col("lbl"))).alias("lbl"),
-            (F.col("cand") < F.col("lbl")).alias("_chg"),
-        )
-
     def peel(rem_n: DataFrame, n_rem) -> DataFrame:
         nonlocal rem_e
         # 1. trim — each round removes ≥ 1 node until it stops, so
@@ -860,15 +824,15 @@ def strongly_connected_components(
                            value=n_rem)
         done.append(rem_n.join(bc(core), "node", "left_anti")
                     .select("node", F.col("node").alias("scc")))
-        rem_e, m = pin(induced(rem_e, core), rows=count)
+        rem_e, m = pin(induced(rem_e, core), **size("src", "dst"))
         if not m["rows"]:  # a trimmed core has edges unless it is empty
             return core
-        # 2. min-label forward propagation to convergence
-        labels, _ = fixpoint(
-            core.select("node", F.col("node").alias("lbl")), color,
-            F.sum(F.col("_chg").cast("long")), _empty, max_prop,
-            on_cap=f"SCC label propagation did not converge in {max_prop} rounds",
-        )
+        # 2. min-label forward propagation to convergence; every core
+        # node has an edge, so the edges' vertices are the core
+        labels = relax(
+            rem_e, m, max_prop,
+            f"SCC label propagation did not converge in {max_prop} rounds",
+        ).select(F.col("vertex").alias("node"), F.col("value").alias("lbl"))
         # 3. backward sweep from roots within each color class; the
         # reached set is the lazy union of the per-round pinned frontiers
         # (re-pinning the whole set every round rewrites O(V·depth))
@@ -919,7 +883,7 @@ def strongly_connected_components(
 
 def weighted_sssp(
     edges: DataFrame,
-    sources: DataFrame | list[str],
+    sources: list[str],
     max_iter: int = 30,
 ) -> DataFrame:
     """Weighted single-source(-set) shortest paths → ``(uri, dist)`` for
@@ -927,58 +891,22 @@ def weighted_sssp(
     is ``(src, dst, w)`` with non-negative weights.
 
     Frontier Bellman–Ford (the distributed form — Dijkstra's priority
-    queue is inherently sequential): each round relaxes ONLY out-edges of
-    vertices improved last round, so a settled graph stops paying; the
-    exchange per round is frontier-sized, not graph-sized, mirroring
-    :func:`bfs_distances` (which this generalizes — bfs is the w≡1
-    case). Raises after ``max_iter`` rounds with an active frontier
-    rather than returning unsettled distances; negative weights are the
-    caller's contract to exclude (Bellman–Ford would need the V−1 bound
-    and a negative-cycle check this operator does not implement).
+    queue is inherently sequential) as :func:`fixpoint.relax`: each round
+    relaxes ONLY out-edges of vertices improved last round, so a settled
+    graph stops paying (:func:`bfs_distances` is the w≡1 case). Raises
+    after ``max_iter`` rounds with an active frontier rather than
+    returning unsettled distances; negative weights are the caller's
+    contract to exclude (Bellman–Ford would need the V−1 bound and a
+    negative-cycle check this operator does not implement), which also
+    makes self-loops no-ops, dropped with null endpoints.
     """
-    if isinstance(sources, list):
-        spark = edges.sparkSession
-        sources = local_frame(spark, [(s,) for s in sources], "uri string")
-    # loop-invariant edge set pinned once (each round joins it); its size
-    # gates the frontier broadcast, as in bfs_distances
-    e, m = pin(edges.select("src", "dst", F.col("w").cast("double")),
-               **size("src", "dst"))
-    bc = gate(m)
-    dist, _ = pin(
-        sources.select("uri", F.lit(0.0).alias("dist"))
-        .distinct()
-        .withColumn("_improved", F.lit(True))
+    e, m = pin(
+        edges.select("src", "dst", F.col("w").cast("double"))
+        .filter(F.col("src") != F.col("dst")),
+        **size("src", "dst"),
     )
-
-    # ONE job per round (VERDICT r5 #1): the relaxation, the dist merge
-    # and the improved flag all land in a single pinned state table whose
-    # job also observes the frontier size — the frontier itself is just a
-    # local filter of the pinned state
-    def step(dist: DataFrame, _) -> DataFrame:
-        frontier = dist.where(F.col("_improved")).select("uri", "dist")
-        cand = (
-            e.join(bc(frontier.withColumnRenamed("uri", "src")), "src")
-            .groupBy(F.col("dst").alias("uri"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("d"))
-        )
-        return (
-            dist.select("uri", "dist")
-            .join(cand, "uri", "full")
-            .select(
-                "uri",
-                F.least(
-                    F.coalesce("dist", F.col("d")),
-                    F.coalesce("d", F.col("dist")),
-                ).alias("dist"),
-                (
-                    F.col("d").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("d") < F.col("dist")))
-                ).alias("_improved"),
-            )
-        )
-
-    dist, _ = fixpoint(
-        dist, step, F.sum(F.col("_improved").cast("long")), _empty, max_iter,
-        on_cap=f"weighted_sssp frontier still active after {max_iter} rounds",
-    )
-    return dist.select("uri", "dist")
+    return relax(
+        e, m, max_iter,
+        f"weighted_sssp frontier still active after {max_iter} rounds",
+        sources,
+    ).select(F.col("vertex").alias("uri"), F.col("value").alias("dist"))

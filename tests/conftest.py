@@ -18,8 +18,10 @@ def spark():
 def both_tiers(monkeypatch):
     """``run`` -> ``[run()]`` under the loop tier (gate closed for every
     table, an empty one included) and the open-gate tier (broadcast
-    joins; the driver-local tier for ``transitive_closure`` and
-    ``connected_components``) of the shared byte gate."""
+    joins; the driver-local tier for ``transitive_closure`` and the
+    ``fixpoint.relax`` callers ``connected_components``,
+    ``bfs_distances``, ``weighted_sssp`` and SCC's colouring) of the
+    shared byte gate."""
     from distributed_extraction_framework_spark.operators import fixpoint
 
     def run_both(run):
@@ -31,6 +33,27 @@ def both_tiers(monkeypatch):
         return out
 
     return run_both
+
+
+@pytest.fixture
+def tiers_agree(both_tiers):
+    """``check(run)`` -> ``run()``'s schema and rows as a sorted multiset,
+    equal under the loop tier and the local tier, which must answer from
+    the driver (a ``LocalRelation``); returns the local tier's. With
+    ``driver=False`` the answer is built from pins after a driver-local
+    step, so only the equality holds."""
+    def check(run, driver=True):
+        def answer():
+            df = run()
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            return ("LocalRelation" in plan, df.schema.simpleString(),
+                    sorted(map(tuple, df.collect())))
+
+        (loop_local, *loop), (local, *loc) = both_tiers(answer)
+        assert loop == loc and not loop_local and (local or not driver)
+        return loc
+
+    return check
 
 
 @pytest.fixture(scope="session")

@@ -230,6 +230,8 @@ def test_hits_star_graph(spark):
     rows = hits(edges2, iterations=4).collect()
     assert abs(sum(r["hub"] for r in rows) - 1.0) < 1e-9
     assert abs(sum(r["auth"] for r in rows) - 1.0) < 1e-9
+    with pytest.raises(ValueError):
+        hits(edges, iterations=0)
 
 
 def test_kcore_peels_pendants(spark):
@@ -460,7 +462,8 @@ def test_k_truss_four_clique(spark):
     assert set(got.values()) == {2}
 
 
-def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, both_tiers):
+def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, both_tiers,
+                                                          tiers_agree):
     """Every caller of the shared byte gate must produce IDENTICAL output
     in both tiers (the gate only changes the physical join strategy,
     never the computation — the loops are exact min/count/max
@@ -521,15 +524,36 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, both_tiers):
 
     for run, nd in [
         (lambda: transitive_closure(redirects), None),
-        (lambda: bfs_distances(edges, ["n0"]), None),
-        (lambda: weighted_sssp(wedges, ["n0"]), None),
         (lambda: kcore(edges, k=2), None),
         (lambda: label_propagation(edges, rounds=3), None),
-        (lambda: connected_components(edges), None),
-        (lambda: strongly_connected_components(edges), None),
         (lambda: owl_entailment(quads, transitive=transitive), None),
         (lambda: hits(edges, iterations=3), 6),
         (lambda: truth_finder(claims, iterations=2), 6),
     ]:
         lo, hi = both_tiers(lambda: rows(run(), nd))
         assert lo and lo == hi
+
+    # the min-plus relaxation callers answer from the driver under the
+    # open gate (SCC only colours there: its answer is pinned pieces);
+    # byte-order minima on non-ASCII URIs, a null weight, a self-loop, a
+    # source absent from the edges, a truncated BFS and an empty graph
+    odd = spark.createDataFrame(
+        [("é", "a", 1.0), ("a", "Ä", None), ("a", "Z", 4.0), ("Ä", "Z", 0.5),
+         ("Z", "é", 2.0), ("Z", "Z", 1.0)], "src string, dst string, w double")
+    empty = spark.createDataFrame([], "src string, dst string, w double")
+    for g in (wedges, odd, empty):
+        tiers_agree(lambda: bfs_distances(g, ["n0", "é", "absent"]))
+        tiers_agree(lambda: bfs_distances(g, ["n0", "é"], max_iter=2))
+        tiers_agree(lambda: weighted_sssp(g, ["n0", "é", "absent"]))
+        tiers_agree(lambda: connected_components(g))
+        tiers_agree(lambda: strongly_connected_components(g), driver=False)
+    assert ("absent", 0.0) in tiers_agree(
+        lambda: weighted_sssp(odd, ["é", "absent"]))[1]
+
+    def message():
+        with pytest.raises(RuntimeError) as err:
+            weighted_sssp(wedges, ["n0"], max_iter=2)
+        return str(err.value)
+
+    loop, loc = both_tiers(message)
+    assert loop == loc and "still active after 2 rounds" in loc

@@ -20,6 +20,10 @@ from distributed_extraction_framework_spark.operators.redirects import (
     transitive_closure,
 )
 from distributed_extraction_framework_spark.operators.extractors import extract
+from distributed_extraction_framework_spark.operators.graph import (
+    bfs_distances,
+    weighted_sssp,
+)
 
 _REDIR = re.compile(REDIRECT_PATTERN)
 
@@ -194,30 +198,22 @@ def test_one_job_per_round(spark, monkeypatch):
         # 2 setup pins (edges, labels); the min label walks one hop per
         # round along the n-edge path, then 1 round changes nothing
         assert jobs("cc_rounds", lambda: connected_components(path)) == 2 + n + 1
+        # BFS and SSSP from p0: 2 setup pins (edges, state); round i
+        # reaches p_i, then 1 round reaches nothing
+        wpath = path.withColumn("w", F.lit(0.5))
+        assert jobs("bfs_rounds", lambda: bfs_distances(path, ["p0"])) == 2 + n + 1
+        assert jobs("sssp_rounds", lambda: weighted_sssp(wpath, ["p0"])) == 2 + n + 1
         # local tier under the default gate: the sizing pin plus toArrow
         monkeypatch.undo()
         assert jobs("tc_local", lambda: transitive_closure(chain)) <= 2
         assert jobs("cc_local", lambda: connected_components(path)) <= 2
+        assert jobs("bfs_local", lambda: bfs_distances(path, ["p0"])) <= 2
+        assert jobs("sssp_local", lambda: weighted_sssp(wpath, ["p0"])) <= 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
-def _tiers_agree(both_tiers, run):
-    """``run()``'s schema and rows as a sorted multiset, equal under the
-    loop tier and the local tier, which must answer from the driver (a
-    ``LocalRelation``); returns the local tier's."""
-    def answer():
-        df = run()
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return ("LocalRelation" in plan, df.schema.simpleString(),
-                sorted(map(tuple, df.collect())))
-
-    (loop_local, *loop), (local, *loc) = both_tiers(answer)
-    assert (loop_local, local) == (False, True) and loop == loc
-    return loc
-
-
-def test_closure_tiers_agree_as_multisets(spark, both_tiers):
+def test_closure_tiers_agree_as_multisets(spark, tiers_agree):
     """The driver-local pointer doubling is the loop tier's exact twin:
     a duplicated src fans out, null endpoints drop, 2- and 4-cycles drop,
     a chain longer than 2^max_iter stops at the same partial state
@@ -231,19 +227,19 @@ def test_closure_tiers_agree_as_multisets(spark, both_tiers):
         ("Ä", "Z"), ("Z", "a"), ("é", "Ä"),
     ] + [(f"l{i:02d}", f"l{i + 1:02d}") for i in range(11)]
     df = spark.createDataFrame(rows, "src string, dst string")
-    got = _tiers_agree(both_tiers, lambda: transitive_closure(df))[1]
+    got = tiers_agree(lambda: transitive_closure(df))[1]
     assert got.count(("A", "D")) == 2 and ("A", "E") in got
     assert not any(s in ("N", None, "X", "Y", "c1") for s, _ in got)
     assert ("é", "a") in got
     # 11 hops at max_iter=2: each link has jumped at most 4 hops
-    assert ("l00", "l04") in _tiers_agree(
-        both_tiers, lambda: transitive_closure(df, max_iter=2))[1]
+    assert ("l00", "l04") in tiers_agree(
+        lambda: transitive_closure(df, max_iter=2))[1]
     empty = spark.createDataFrame([], "src string, dst string")
-    assert _tiers_agree(both_tiers, lambda: transitive_closure(empty)) == [
+    assert tiers_agree(lambda: transitive_closure(empty)) == [
         "struct<src:string,dst:string>", []]
 
 
-def test_connected_components_tiers_agree(spark, both_tiers):
+def test_connected_components_tiers_agree(spark, both_tiers, tiers_agree):
     """Driver-local min-label CC against the loop tier: byte-order
     minimum on non-ASCII URIs (``Z`` < ``a`` < ``Ä`` < ``é``, unlike a
     case-folded order), the same cap behaviour on a path longer than
@@ -251,10 +247,10 @@ def test_connected_components_tiers_agree(spark, both_tiers):
     rows = [("é", "a"), ("a", "Ä"), ("Ä", "Z"), ("q", "r"), ("s", None)] + [
         (f"p{i}", f"p{i + 1}") for i in range(6)]
     df = spark.createDataFrame(rows, "src string, dst string")
-    comp = dict(_tiers_agree(both_tiers, lambda: connected_components(df))[1])
+    comp = dict(tiers_agree(lambda: connected_components(df))[1])
     assert comp["é"] == "Z" and comp["r"] == "q"
-    comp = dict(_tiers_agree(
-        both_tiers, lambda: connected_components(df, max_iter=3, strict=False))[1])
+    comp = dict(tiers_agree(
+        lambda: connected_components(df, max_iter=3, strict=False))[1])
     assert comp["p6"] == "p3"
 
     def message():
@@ -265,5 +261,5 @@ def test_connected_components_tiers_agree(spark, both_tiers):
     loop, loc = both_tiers(message)
     assert loop == loc and "did not converge in 3 rounds" in loc
     empty = spark.createDataFrame([], "src string, dst string")
-    assert _tiers_agree(both_tiers, lambda: connected_components(empty)) == [
+    assert tiers_agree(lambda: connected_components(empty)) == [
         "struct<vertex:string,component:string>", []]
