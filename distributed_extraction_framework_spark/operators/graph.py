@@ -898,11 +898,13 @@ def weighted_sssp(
     returning unsettled distances; negative weights are the caller's
     contract to exclude (Bellman–Ford would need the V−1 bound and a
     negative-cycle check this operator does not implement), which also
-    makes self-loops no-ops, dropped with null endpoints.
+    makes self-loops no-ops, dropped with null endpoints. An edge whose
+    weight is null or NaN is dropped too: it reaches nothing.
     """
     e, m = pin(
         edges.select("src", "dst", F.col("w").cast("double"))
-        .filter(F.col("src") != F.col("dst")),
+        .filter((F.col("src") != F.col("dst")) & ~F.isnan(F.col("w"))
+                & F.col("w").isNotNull()),
         **size("src", "dst"),
     )
     return relax(

@@ -20,10 +20,15 @@ counters (C3). Spark-native redesign:
 * a ``lineage`` table gets one row per (run, output, partition): row
   counts per output partition, wall time, fingerprint, status — the
   north_rule per-partition lineage, an append-only log the pipeline
-  never reads back;
+  never reads back. Each commit adds one parquet part that the driver
+  encodes and stores through the Hadoop FS, so lineage runs no Spark
+  job; the counts ride the data write's ``observe()`` (one conditional
+  count per known partition key), and only a stage whose keys are not
+  known in advance re-reads its partition column;
 * a ``metrics`` table records the C3-style counters (pages in, quads
   out, failures) captured via ``observe()`` — executor-side, no extra
-  action; a run that built nothing records one ``resumed`` row;
+  action — and appended by one small Spark write; a run that built
+  nothing records one ``resumed`` row;
 * **resume**: a re-run skips every output whose record names the same
   input⊕config fingerprint, loading the snapshot instead (checkpoint
   restart = delete nothing, just run again).
@@ -37,6 +42,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
@@ -47,7 +54,7 @@ from ..operators import extractors as X
 from ..operators.canonicalize import canonicalize_quads, connected_components
 from ..operators.linking import link_entities, surface_forms_from_labels
 from ..operators.redirects import harvest_redirects, resolve_objects, transitive_closure
-from ..session import local_frame
+from ..session import arrow_table, local_frame
 from . import materialize as M
 
 # bigint counters, as lineage tables of earlier versions hold them, so
@@ -181,11 +188,26 @@ class Pipeline:
     def _stage_path(self, stage: str) -> str:
         return f"{self.cfg.warehouse}/{stage}"
 
-    def _record_file(self, name: str):
-        """(FileSystem, Path) of output ``name``'s commit record."""
+    def _record_file(self, name: str, file: str = "_schema.json"):
+        """(FileSystem, Path) of ``file`` in output ``name``'s directory,
+        by default its commit record."""
         p = self.spark._jvm.org.apache.hadoop.fs.Path(
-            f"{self._stage_path(name)}/_schema.json")
+            f"{self._stage_path(name)}/{file}")
         return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
+
+    def _put(self, name: str, file: str, data: bytes) -> None:
+        """Store ``data`` as ``file`` in output ``name``'s directory,
+        whole or not at all: write it as ``_{file}.tmp`` (Spark's reader
+        skips ``_`` names), then rename it into place."""
+        fs, tmp = self._record_file(name, f"_{file}.tmp")
+        _, p = self._record_file(name, file)
+        stream = fs.create(tmp, True)
+        try:
+            stream.write(bytearray(data))
+        finally:
+            stream.close()
+        if not fs.rename(tmp, p):
+            raise OSError(f"could not commit {file} of {name}")
 
     def _read_record(self, name: str) -> dict | None:
         """The commit record of output ``name``: StructType JSON plus the
@@ -218,14 +240,20 @@ class Pipeline:
         return self.spark.read.schema(schema).parquet(self._stage_path(name))
 
     def _append_lineage(self, rows: list[tuple]) -> None:
-        local_frame(self.spark, rows, LINEAGE_SCHEMA).write.mode(
-            "append").parquet(self._stage_path("lineage"))
+        """Append ``rows`` to ``lineage`` as one parquet part that the
+        driver encodes: no Spark job. Parts Spark wrote earlier hold the
+        same column types, so older warehouses keep appending."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(arrow_table(rows, LINEAGE_SCHEMA), buf,
+                       compression="snappy")
+        self._put("lineage", f"part-{uuid.uuid4()}.snappy.parquet",
+                  buf.getvalue().to_pybytes())
 
     def _commit(self, names: list[str], key: str, write: "callable") -> None:
         """The one commit path of every output. ``write()`` writes the
         data of ``names`` and returns ``{name: (schema, {partition:
         rows})}``. In order: delete each old record, write, append the
-        lineage rows (``ts`` ends the ``wall_ms`` window), then write each
+        lineage part (``ts`` ends the ``wall_ms`` window), then write each
         record to a temporary name and rename it to ``_schema.json``. A
         failure at any step leaves no record naming ``key``, so the next
         run rebuilds the outputs."""
@@ -241,15 +269,9 @@ class Pipeline:
             for name, (_, rows) in records.items() for part, n in rows.items()
         ])
         for name, (schema, rows) in records.items():
-            fs, p = self._record_file(name)
-            tmp = p.suffix(".tmp")
-            stream = fs.create(tmp, True)
-            stream.write(bytearray(json.dumps(
+            self._put(name, "_schema.json", json.dumps(
                 {**schema.jsonValue(), "fingerprint": key, "rows": rows}
-            ).encode("utf-8")))
-            stream.close()
-            if not fs.rename(tmp, p):
-                raise OSError(f"could not commit the record of {name}")
+            ).encode("utf-8"))
 
     def _run_stage(
         self,
@@ -259,41 +281,53 @@ class Pipeline:
         partition_col: str | None = None,
         partition_by: str | None = None,
         counters: "callable | None" = None,
+        partition_keys: "list[str] | tuple[str, ...]" = (),
     ) -> DataFrame:
         """Run-or-resume one stage; returns the stage output DataFrame,
         read back through its record's schema (no read runs an inference
         job, and an EMPTY partitioned stage, which has no part file to
         infer from, still reads back). ``counters()`` gives the (metric,
         value) rows the data write observed; they append to ``metrics``
-        inside the commit, so a later failure cannot lose them."""
+        inside the commit, so a later failure cannot lose them.
+
+        The record's rows ride the write as ``observe()`` metrics: the
+        total, and one count per value in ``partition_keys`` (the values
+        ``partition_col`` can take). Only when those counts do not add
+        up to the total does a ``groupBy`` over the written partition
+        column count them; an empty stage records one "*" row of 0."""
         def write() -> dict:
             path = self._stage_path(stage)
             df = build()
-            if not partition_col:
-                # the row total rides the stage write itself as an
-                # observe() metric — no post-write count job
-                row_obs = Observation()
-                df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("n"), *[
+                F.count_if(F.col(partition_col) == k)
+                .alias(f"{partition_col}={k}") for k in partition_keys])
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(partition_by)
             writer.parquet(path)
             if counters:
                 self._write_metrics(counters())
+            got = {k: int(v or 0) for k, v in obs.get.items()}
+            n = got.pop("n")
             if not partition_col:
-                return {stage: (df.schema, {"*": int(row_obs.get["n"] or 0)})}
-            # per-partition-value counts, which observe cannot group: a
-            # groupBy over the written parquet scans only the partition
-            # column; an empty stage logs one "*" row of 0
-            counts = self.spark.read.schema(df.schema).parquet(path).groupBy(
-                partition_col).count().collect()
-            return {stage: (df.schema, {
-                f"{partition_col}={r[partition_col]}": r["count"]
-                for r in counts} or {"*": 0})}
+                return {stage: (df.schema, {"*": n})}
+            rows = {k: v for k, v in got.items() if v}
+            if sum(rows.values()) != n:
+                rows = self._partition_rows(path, df.schema, partition_col)
+            return {stage: (df.schema, rows or {"*": 0})}
 
         if not self._committed(stage, fingerprint):
             self._commit([stage], fingerprint, write)
         return self._read_stage(stage)
+
+    def _partition_rows(self, path: str, schema: StructType,
+                        partition_col: str) -> dict[str, int]:
+        """``{"col=value": rows}`` of the stage written at ``path``, by a
+        ``groupBy`` that scans only its partition column."""
+        return {f"{partition_col}={r[partition_col]}": r["count"]
+                for r in self.spark.read.schema(schema).parquet(path)
+                .groupBy(partition_col).count().collect()}
 
     def _export(self, quads: DataFrame, fp: str, rows_stage: str) -> None:
         """K1: the multi-format export fan-out (N-Triples/N-Quads/Turtle/...
@@ -361,6 +395,13 @@ class Pipeline:
         # C1 collapse: quad stages optionally lay out as (page_lang, dataset)
         part_cols = (["page_lang", "dataset"] if self.cfg.partition_by_lang
                      else "dataset")
+        # every extractor tags its own dataset, and the later quad stages
+        # keep the column: the datasets a quad stage can hold. The
+        # (page_lang, dataset) layout, whose language directories are
+        # known only after the write, keeps counting by a re-read
+        extractors = self.cfg.extractors
+        datasets = () if self.cfg.partition_by_lang else (
+            list(X.EXTRACTORS) if extractors is None else extractors)
 
         def build_quads() -> DataFrame:
             p = pages.observe(pages_obs, F.count(F.lit(1)).alias("pages_in"))
@@ -377,6 +418,7 @@ class Pipeline:
         quads = self._run_stage(
             "quads", fp, build_quads,
             partition_col="dataset", partition_by=part_cols,
+            partition_keys=datasets,
             counters=lambda: [("pages_in", int(pages_obs.get["pages_in"])),
                               ("quads_out", int(obs.get["quads_out"]))],
         )
@@ -391,6 +433,7 @@ class Pipeline:
             lambda: resolve_objects(quads, redirects_cl,
                                     datasets=self.cfg.resolve_datasets),
             partition_col="dataset", partition_by=part_cols,
+            partition_keys=datasets,
         )
 
         final = resolved
@@ -406,7 +449,8 @@ class Pipeline:
 
             final = self._run_stage("quads_canonical", fp, build_canonical,
                                     partition_col="dataset",
-                                    partition_by=part_cols)
+                                    partition_by=part_cols,
+                                    partition_keys=datasets)
 
         # optional SI normalization of unit-typed literals ("5 km" →
         # 5000.0 datatype/metre) as its OWN resumable stage — never a
@@ -425,7 +469,8 @@ class Pipeline:
             final_stage = "quads_si"
             final = self._run_stage("quads_si", fp, build_si,
                                     partition_col="dataset",
-                                    partition_by=part_cols)
+                                    partition_by=part_cols,
+                                    partition_keys=datasets)
 
         outputs: dict[str, DataFrame] = {"quads": final}
 

@@ -291,15 +291,21 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     """
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows, schema: StructType | str) -> pa.Table:
+    """``rows`` (tuples, positional, or a ``pa.Table`` with ``schema``'s
+    column names) as an Arrow table of ``schema``'s Arrow form."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     if isinstance(rows, pa.Table):
-        table = rows.cast(arrow)
-    else:
-        cols = list(zip(*rows)) or [()] * len(arrow)
-        table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-        )
-    return spark.createDataFrame(table, schema)
+        return rows.cast(arrow)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
 
 
 _SHIPPED: set[str] = set()

@@ -2,9 +2,10 @@
 
 A small ``Pipeline.run`` (linking, canonicalization and one export format
 on) and a small ``WebKGPipeline.run`` (CDX index on) are failed at the
-k-th data write, the k-th lineage append and the k-th record rename, for
-every k a clean run reaches. A re-run on the same warehouse must then
-leave every output equal to a clean run's, by content digest.
+k-th data write, the k-th lineage append and the k-th rename (of a
+lineage part or of a record), for every k a clean run reaches. A re-run
+on the same warehouse must then leave every output equal to a clean
+run's, by content digest.
 """
 
 from __future__ import annotations
@@ -69,13 +70,13 @@ class _RenameHook:
 
 @pytest.fixture
 def hooks(monkeypatch):
-    """Route every data write (a parquet or text write other than the
-    lineage append), lineage append and record rename through the
-    calling thread's counters."""
+    """Route every data write (a parquet or text write; lineage parts are
+    stored by the driver), lineage append and rename of a file the commit
+    path stores (a lineage part or a record) through the calling
+    thread's counters."""
     for name in ("parquet", "text"):
         def write(self, path, *a, _orig=getattr(DataFrameWriter, name), **kw):
-            if not path.endswith("/lineage"):
-                _hit("write")
+            _hit("write")
             return _orig(self, path, *a, **kw)
 
         monkeypatch.setattr(DataFrameWriter, name, write)
@@ -84,8 +85,8 @@ def hooks(monkeypatch):
         _hit("lineage")
         return _orig(self, rows)
 
-    def record_file(self, name, _orig=Pipeline._record_file):
-        fs, p = _orig(self, name)
+    def record_file(self, name, *a, _orig=Pipeline._record_file):
+        fs, p = _orig(self, name, *a)
         return _RenameHook(fs), p
 
     monkeypatch.setattr(Pipeline, "_append_lineage", append)

@@ -535,12 +535,17 @@ def test_loop_operators_broadcast_and_shuffle_tiers_agree(spark, both_tiers,
 
     # the min-plus relaxation callers answer from the driver under the
     # open gate (SCC only colours there: its answer is pinned pieces);
-    # byte-order minima on non-ASCII URIs, a null weight, a self-loop, a
-    # source absent from the edges, a truncated BFS and an empty graph
+    # byte-order minima on non-ASCII URIs, a null and a NaN weight, a
+    # self-loop, a source absent from the edges, a truncated BFS and an
+    # empty graph
     odd = spark.createDataFrame(
         [("é", "a", 1.0), ("a", "Ä", None), ("a", "Z", 4.0), ("Ä", "Z", 0.5),
          ("Z", "é", 2.0), ("Z", "Z", 1.0)], "src string, dst string, w double")
     empty = spark.createDataFrame([], "src string, dst string, w double")
+    nan = spark.createDataFrame([("a", "b", float("nan")), ("a", "c", 1.0)],
+                                "src string, dst string, w double")
+    assert tiers_agree(lambda: weighted_sssp(nan, ["a"]))[1] == [
+        ("a", 0.0), ("c", 1.0)]
     for g in (wedges, odd, empty):
         tiers_agree(lambda: bfs_distances(g, ["n0", "é", "absent"]))
         tiers_agree(lambda: bfs_distances(g, ["n0", "é"], max_iter=2))

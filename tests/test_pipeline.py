@@ -310,12 +310,30 @@ def test_pipeline_counters_survive_a_failed_run(spark, tmp_path, monkeypatch):
     assert [m for m, _ in counters(clean)] == ["pages_in", "quads_out"]
 
 
-def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path):
+def _lineage_rows(spark, wh: str, stage: str) -> dict:
+    """``{partition: n_rows}`` of ``stage``'s lineage rows."""
+    return {r["partition"]: r["n_rows"] for r in spark.read.parquet(
+        wh + "/lineage").filter(F.col("stage") == stage).collect()}
+
+
+def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path,
+                                               monkeypatch):
     """K1+C1 wired into the resumable DAG (VERDICT r3 #10): quad stages lay
-    out as (page_lang, dataset); the export fan-out writes per-format
-    compressed text as a committed output that resume skips."""
+    out as (page_lang, dataset), and count their per-dataset lineage rows
+    by re-reading the written partition column; the export fan-out writes
+    per-format compressed text as a committed output that resume skips."""
     import os
 
+    from distributed_extraction_framework_spark.plans.pipeline import Pipeline
+
+    rereads = []
+    orig = Pipeline._partition_rows
+
+    def reread(self, path, *a):
+        rereads.append(os.path.basename(path))
+        return orig(self, path, *a)
+
+    monkeypatch.setattr(Pipeline, "_partition_rows", reread)
     wh = str(tmp_path / "wh_fanout")
     out = run_pipeline(
         spark, pages_df, wh,
@@ -323,7 +341,13 @@ def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path):
         partition_by_lang=True,
         output_formats={"nt.gz": "n-triples", "tql.gz": "n-quads"},
     )
+    monkeypatch.undo()
     assert out["quads"].count() > 0
+    assert rereads == ["quads", "quads_resolved"]
+    for stage in rereads:
+        written = spark.read.parquet(f"{wh}/{stage}").groupBy("dataset").count()
+        assert _lineage_rows(spark, wh, stage) == {
+            f"dataset={r['dataset']}": r["count"] for r in written.collect()}
 
     # (page_lang=..., dataset=...) physical layout on the quads stage
     langs = [d for d in os.listdir(wh + "/quads") if d.startswith("page_lang=")]
@@ -614,6 +638,8 @@ def test_pipeline_empty_partitioned_stage_resumes(spark, tmp_path):
     p1 = Pipeline(spark, cfg)
     p1.run(pages)
     assert "quads" in p1._fresh
+    for stage in ("quads", "quads_resolved"):
+        assert _lineage_rows(spark, wh, stage) == {"*": 0}
     p2 = Pipeline(spark, cfg)
     p2.run(pages)
     assert "quads" not in p2._fresh, (
@@ -640,12 +666,15 @@ def test_local_frame_matches_create_dataframe(spark):
 def test_stage_bookkeeping_sends_no_driver_rows_through_python(
     spark, monkeypatch, tmp_path
 ):
-    """The lineage flush, the metrics write and linking's broadcast-tier
-    dictionary build driver-side tables as Arrow local relations: no
-    ``createDataFrame`` of a Python list or tuple (a PythonRDD job) runs
-    anywhere in a Pipeline or WebKGPipeline run."""
+    """The metrics write and linking's broadcast-tier dictionary build
+    driver-side tables as Arrow local relations: no ``createDataFrame``
+    of a Python list or tuple (a PythonRDD job) runs anywhere in a
+    Pipeline or WebKGPipeline run. Lineage runs no Spark job at all, and
+    on a default config no stage re-reads its partitions to count them:
+    the per-partition lineage rows ride the data writes."""
     from pyspark.sql import SparkSession
 
+    from distributed_extraction_framework_spark.plans.pipeline import Pipeline
     from distributed_extraction_framework_spark.plans.webkg import (
         WebKGConfig, WebKGPipeline,
     )
@@ -670,16 +699,77 @@ def test_stage_bookkeeping_sends_no_driver_rows_through_python(
         return orig(self, data, *args, **kwargs)
 
     monkeypatch.setattr(SparkSession, "createDataFrame", guarded)
-    out = run_pipeline(spark, pages, str(tmp_path / "wiki"),
-                       canonicalize=False)
-    web_out = WebKGPipeline(
-        spark, WebKGConfig(warehouse=str(tmp_path / "web"))
-    ).run(web)
-    monkeypatch.undo()
+    sc = spark.sparkContext
+    calls = []
+
+    def probe(group, orig):
+        """``orig`` run under its own job group ``group``."""
+        def run(self, *a):
+            calls.append(group)
+            sc.setJobGroup(group, group)
+            try:
+                return orig(self, *a)
+            finally:
+                sc.setJobGroup("bookkeeping", "bookkeeping")
+        return run
+
+    for group, name in (("lineage", "_append_lineage"),
+                        ("reread", "_partition_rows")):
+        monkeypatch.setattr(Pipeline, name, probe(group, getattr(Pipeline, name)))
+    sc.setJobGroup("bookkeeping", "bookkeeping")
+    try:
+        out = run_pipeline(spark, pages, str(tmp_path / "wiki"),
+                           canonicalize=False)
+        web_out = WebKGPipeline(
+            spark, WebKGConfig(warehouse=str(tmp_path / "web"))
+        ).run(web)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
     assert not local_inputs
+    jobs = sc.statusTracker().getJobIdsForGroup
+    # one lineage part per commit: 6 wiki (disambiguation_ids, quads,
+    # redirect_closure, quads_resolved, entity_links, the graph tables)
+    # and 4 WebKG (web_pages, web_redirect_closure, web_triples,
+    # web_triples_resolved)
+    assert calls == ["lineage"] * 10 and jobs("bookkeeping")
+    assert jobs("lineage") == [] and jobs("reread") == []
     assert out["entity_links"].count() > 0
     assert web_out["web_triples_resolved"].count() > 0
     assert spark.read.parquet(str(tmp_path / "wiki" / "metrics")).count() == 2
+    for wh, stage in (("wiki", "quads"), ("wiki", "quads_resolved"),
+                      ("web", "web_triples"), ("web", "web_triples_resolved")):
+        path = str(tmp_path / wh)
+        col = "dataset" if wh == "wiki" else "obj_kind"
+        written = spark.read.parquet(f"{path}/{stage}").groupBy(col).count()
+        assert _lineage_rows(spark, path, stage) == {
+            f"{col}={r[col]}": r["count"] for r in written.collect()}
+
+
+def test_lineage_appends_to_spark_written_parts(spark, tmp_path):
+    """A lineage table that holds a part Spark wrote (as earlier versions
+    appended) keeps appending driver-written parts: the read gives
+    ``LINEAGE_SCHEMA``'s types and both appends' rows, and skips a
+    leftover ``_``-prefixed temporary file."""
+    from pyspark.sql.types import StructType
+
+    from distributed_extraction_framework_spark.plans.pipeline import (
+        LINEAGE_SCHEMA, Pipeline, PipelineConfig,
+    )
+    from distributed_extraction_framework_spark.session import local_frame
+
+    wh = str(tmp_path / "wh")
+    old = [("r0", "quads", "dataset=labels", 3, 10, "fp", "complete", 100)]
+    new = [("r1", "quads", "*", 0, 5, "fp", "complete", 200),
+           ("r1", "edges", "*", 7, None, "fp", "complete", None)]
+    local_frame(spark, old, LINEAGE_SCHEMA).write.mode("append").parquet(
+        wh + "/lineage")
+    Pipeline(spark, PipelineConfig(warehouse=wh))._append_lineage(new)
+    with open(f"{wh}/lineage/_part-left-over.snappy.parquet.tmp", "wb") as f:
+        f.write(b"not parquet")
+    got = spark.read.parquet(wh + "/lineage")
+    assert got.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    assert sorted(map(tuple, got.collect())) == sorted(old + new)
 
 
 def test_graph_table_lineage_counts_ride_the_writes(spark, pages_df, tmp_path):
