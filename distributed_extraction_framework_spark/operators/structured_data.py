@@ -99,10 +99,6 @@ _TRIPLE = StructType([
     StructField("obj", StringType(), False),
     StructField("obj_kind", StringType(), False),
 ])
-# the obj_kind values web_page_triples emits once the root markers are
-# rewritten: the entity channels' uri/bnode/literal, the table channel's
-# mention
-OBJ_KINDS = ("uri", "bnode", "literal", "mention")
 
 
 def _scalar_lexical(v) -> str | None:

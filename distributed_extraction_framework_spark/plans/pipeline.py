@@ -21,10 +21,9 @@ counters (C3). Spark-native redesign:
   counts per output partition, wall time, fingerprint, status — the
   north_rule per-partition lineage, an append-only log the pipeline
   never reads back. Each commit adds one parquet part that the driver
-  encodes and stores through the Hadoop FS, so lineage runs no Spark
-  job; the counts ride the data write's ``observe()`` (one conditional
-  count per known partition key), and only a stage whose keys are not
-  known in advance re-reads its partition column;
+  encodes and stores through the Hadoop FS, so the append runs no
+  Spark job; a partitioned stage counts its partitions with one
+  ``groupBy`` over the written partition column;
 * a ``metrics`` table records the C3-style counters (pages in, quads
   out, failures) captured via ``observe()`` — executor-side, no extra
   action — and appended by one small Spark write; a run that built
@@ -281,53 +280,41 @@ class Pipeline:
         partition_col: str | None = None,
         partition_by: str | None = None,
         counters: "callable | None" = None,
-        partition_keys: "list[str] | tuple[str, ...]" = (),
     ) -> DataFrame:
         """Run-or-resume one stage; returns the stage output DataFrame,
         read back through its record's schema (no read runs an inference
         job, and an EMPTY partitioned stage, which has no part file to
         infer from, still reads back). ``counters()`` gives the (metric,
         value) rows the data write observed; they append to ``metrics``
-        inside the commit, so a later failure cannot lose them.
-
-        The record's rows ride the write as ``observe()`` metrics: the
-        total, and one count per value in ``partition_keys`` (the values
-        ``partition_col`` can take). Only when those counts do not add
-        up to the total does a ``groupBy`` over the written partition
-        column count them; an empty stage records one "*" row of 0."""
+        inside the commit, so a later failure cannot lose them."""
         def write() -> dict:
             path = self._stage_path(stage)
             df = build()
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"), *[
-                F.count_if(F.col(partition_col) == k)
-                .alias(f"{partition_col}={k}") for k in partition_keys])
+            if not partition_col:
+                # the row total rides the stage write itself as an
+                # observe() metric — no post-write count job
+                row_obs = Observation()
+                df = df.observe(row_obs, F.count(F.lit(1)).alias("n"))
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(partition_by)
             writer.parquet(path)
             if counters:
                 self._write_metrics(counters())
-            got = {k: int(v or 0) for k, v in obs.get.items()}
-            n = got.pop("n")
             if not partition_col:
-                return {stage: (df.schema, {"*": n})}
-            rows = {k: v for k, v in got.items() if v}
-            if sum(rows.values()) != n:
-                rows = self._partition_rows(path, df.schema, partition_col)
-            return {stage: (df.schema, rows or {"*": 0})}
+                return {stage: (df.schema, {"*": int(row_obs.get["n"] or 0)})}
+            # per-partition-value counts, which observe cannot group: a
+            # groupBy over the written parquet scans only the partition
+            # column; an empty stage logs one "*" row of 0
+            counts = self.spark.read.schema(df.schema).parquet(path).groupBy(
+                partition_col).count().collect()
+            return {stage: (df.schema, {
+                f"{partition_col}={r[partition_col]}": r["count"]
+                for r in counts} or {"*": 0})}
 
         if not self._committed(stage, fingerprint):
             self._commit([stage], fingerprint, write)
         return self._read_stage(stage)
-
-    def _partition_rows(self, path: str, schema: StructType,
-                        partition_col: str) -> dict[str, int]:
-        """``{"col=value": rows}`` of the stage written at ``path``, by a
-        ``groupBy`` that scans only its partition column."""
-        return {f"{partition_col}={r[partition_col]}": r["count"]
-                for r in self.spark.read.schema(schema).parquet(path)
-                .groupBy(partition_col).count().collect()}
 
     def _export(self, quads: DataFrame, fp: str, rows_stage: str) -> None:
         """K1: the multi-format export fan-out (N-Triples/N-Quads/Turtle/...
@@ -395,13 +382,6 @@ class Pipeline:
         # C1 collapse: quad stages optionally lay out as (page_lang, dataset)
         part_cols = (["page_lang", "dataset"] if self.cfg.partition_by_lang
                      else "dataset")
-        # every extractor tags its own dataset, and the later quad stages
-        # keep the column: the datasets a quad stage can hold. The
-        # (page_lang, dataset) layout, whose language directories are
-        # known only after the write, keeps counting by a re-read
-        extractors = self.cfg.extractors
-        datasets = () if self.cfg.partition_by_lang else (
-            list(X.EXTRACTORS) if extractors is None else extractors)
 
         def build_quads() -> DataFrame:
             p = pages.observe(pages_obs, F.count(F.lit(1)).alias("pages_in"))
@@ -418,7 +398,6 @@ class Pipeline:
         quads = self._run_stage(
             "quads", fp, build_quads,
             partition_col="dataset", partition_by=part_cols,
-            partition_keys=datasets,
             counters=lambda: [("pages_in", int(pages_obs.get["pages_in"])),
                               ("quads_out", int(obs.get["quads_out"]))],
         )
@@ -433,7 +412,6 @@ class Pipeline:
             lambda: resolve_objects(quads, redirects_cl,
                                     datasets=self.cfg.resolve_datasets),
             partition_col="dataset", partition_by=part_cols,
-            partition_keys=datasets,
         )
 
         final = resolved
@@ -449,8 +427,7 @@ class Pipeline:
 
             final = self._run_stage("quads_canonical", fp, build_canonical,
                                     partition_col="dataset",
-                                    partition_by=part_cols,
-                                    partition_keys=datasets)
+                                    partition_by=part_cols)
 
         # optional SI normalization of unit-typed literals ("5 km" →
         # 5000.0 datatype/metre) as its OWN resumable stage — never a
@@ -469,8 +446,7 @@ class Pipeline:
             final_stage = "quads_si"
             final = self._run_stage("quads_si", fp, build_si,
                                     partition_col="dataset",
-                                    partition_by=part_cols,
-                                    partition_keys=datasets)
+                                    partition_by=part_cols)
 
         outputs: dict[str, DataFrame] = {"quads": final}
 

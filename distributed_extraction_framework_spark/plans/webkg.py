@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.redirects import transitive_closure
 from ..operators.scrub import latest_capture
-from ..operators.structured_data import OBJ_KINDS, web_page_triples
+from ..operators.structured_data import web_page_triples
 from ..sources.warc import web_redirects
 from .pipeline import TEXT_SCHEMA, Pipeline, config_digest
 
@@ -181,7 +181,6 @@ class WebKGPipeline(Pipeline):
             "web_triples", fp,
             lambda: web_page_triples(latest, url_col=cfg.url_col),
             partition_col="obj_kind", partition_by="obj_kind",
-            partition_keys=OBJ_KINDS,
         )
         out["web_triples"] = triples
         final, final_stage = triples, "web_triples"
@@ -213,7 +212,6 @@ class WebKGPipeline(Pipeline):
             final = self._run_stage(
                 final_stage, fp, build_resolved,
                 partition_col="obj_kind", partition_by="obj_kind",
-                partition_keys=OBJ_KINDS,
             )
             out["web_triples_resolved"] = final
 

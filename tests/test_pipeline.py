@@ -316,24 +316,13 @@ def _lineage_rows(spark, wh: str, stage: str) -> dict:
         wh + "/lineage").filter(F.col("stage") == stage).collect()}
 
 
-def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path,
-                                               monkeypatch):
+def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path):
     """K1+C1 wired into the resumable DAG (VERDICT r3 #10): quad stages lay
-    out as (page_lang, dataset), and count their per-dataset lineage rows
-    by re-reading the written partition column; the export fan-out writes
-    per-format compressed text as a committed output that resume skips."""
+    out as (page_lang, dataset) and log one lineage row per dataset with
+    its exact row count; the export fan-out writes per-format compressed
+    text as a committed output that resume skips."""
     import os
 
-    from distributed_extraction_framework_spark.plans.pipeline import Pipeline
-
-    rereads = []
-    orig = Pipeline._partition_rows
-
-    def reread(self, path, *a):
-        rereads.append(os.path.basename(path))
-        return orig(self, path, *a)
-
-    monkeypatch.setattr(Pipeline, "_partition_rows", reread)
     wh = str(tmp_path / "wh_fanout")
     out = run_pipeline(
         spark, pages_df, wh,
@@ -341,10 +330,8 @@ def test_pipeline_fanout_and_lang_partitioning(spark, pages_df, tmp_path,
         partition_by_lang=True,
         output_formats={"nt.gz": "n-triples", "tql.gz": "n-quads"},
     )
-    monkeypatch.undo()
     assert out["quads"].count() > 0
-    assert rereads == ["quads", "quads_resolved"]
-    for stage in rereads:
+    for stage in ("quads", "quads_resolved"):
         written = spark.read.parquet(f"{wh}/{stage}").groupBy("dataset").count()
         assert _lineage_rows(spark, wh, stage) == {
             f"dataset={r['dataset']}": r["count"] for r in written.collect()}
@@ -669,9 +656,8 @@ def test_stage_bookkeeping_sends_no_driver_rows_through_python(
     """The metrics write and linking's broadcast-tier dictionary build
     driver-side tables as Arrow local relations: no ``createDataFrame``
     of a Python list or tuple (a PythonRDD job) runs anywhere in a
-    Pipeline or WebKGPipeline run. Lineage runs no Spark job at all, and
-    on a default config no stage re-reads its partitions to count them:
-    the per-partition lineage rows ride the data writes."""
+    Pipeline or WebKGPipeline run, and lineage runs no Spark job at all;
+    its per-partition rows equal the written partitions' counts."""
     from pyspark.sql import SparkSession
 
     from distributed_extraction_framework_spark.plans.pipeline import Pipeline
@@ -701,21 +687,18 @@ def test_stage_bookkeeping_sends_no_driver_rows_through_python(
     monkeypatch.setattr(SparkSession, "createDataFrame", guarded)
     sc = spark.sparkContext
     calls = []
+    orig_append = Pipeline._append_lineage
 
-    def probe(group, orig):
-        """``orig`` run under its own job group ``group``."""
-        def run(self, *a):
-            calls.append(group)
-            sc.setJobGroup(group, group)
-            try:
-                return orig(self, *a)
-            finally:
-                sc.setJobGroup("bookkeeping", "bookkeeping")
-        return run
+    def append(self, rows):
+        """``_append_lineage`` run under its own job group."""
+        calls.append("lineage")
+        sc.setJobGroup("lineage", "lineage")
+        try:
+            return orig_append(self, rows)
+        finally:
+            sc.setJobGroup("bookkeeping", "bookkeeping")
 
-    for group, name in (("lineage", "_append_lineage"),
-                        ("reread", "_partition_rows")):
-        monkeypatch.setattr(Pipeline, name, probe(group, getattr(Pipeline, name)))
+    monkeypatch.setattr(Pipeline, "_append_lineage", append)
     sc.setJobGroup("bookkeeping", "bookkeeping")
     try:
         out = run_pipeline(spark, pages, str(tmp_path / "wiki"),
@@ -733,7 +716,7 @@ def test_stage_bookkeeping_sends_no_driver_rows_through_python(
     # and 4 WebKG (web_pages, web_redirect_closure, web_triples,
     # web_triples_resolved)
     assert calls == ["lineage"] * 10 and jobs("bookkeeping")
-    assert jobs("lineage") == [] and jobs("reread") == []
+    assert jobs("lineage") == []
     assert out["entity_links"].count() > 0
     assert web_out["web_triples_resolved"].count() > 0
     assert spark.read.parquet(str(tmp_path / "wiki" / "metrics")).count() == 2
@@ -856,11 +839,15 @@ def test_resume_runs_no_inference_jobs_and_keeps_committed_schema(
     out = p._run_stage("digits", "fp", lambda: df,
                        partition_col="k", partition_by="k")
     with open(tmp_path / "whk" / "digits" / "_schema.json") as f:
-        sidecar = StructType.fromJson(json.load(f))
+        record = json.load(f)
+    sidecar = StructType.fromJson(record)
     assert out.schema == sidecar
     assert dict(out.dtypes)["k"] == "string"
     assert sorted(r["k"] for r in out.select("k").distinct().collect()) == [
         "0", "1", "2", "3", "4"]
+    assert _lineage_rows(spark, str(tmp_path / "whk"), "digits") == {
+        f"k={i}": 2 for i in range(5)}
+    assert record["rows"] == {f"k={i}": 2 for i in range(5)}
 
 
 def test_stage_without_sidecar_is_rebuilt(spark, tmp_path):
